@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.RollingZ
 import graft.sources.Tables
 
 /** Order-flow analytics re-expressing the reference's trade-stream operators
@@ -17,10 +18,11 @@ import graft.sources.Tables
   *
   * The reference recomputes each signal by scanning its whole deque per tick
   * (O(window) per tick); here each is ONE declarative pass — a hash
-  * aggregation plus (for z) a bounded row-frame window — so Catalyst gets
-  * map-side partial aggregation and whole-stage codegen. At cluster scale the
-  * `Window.orderBy` becomes `Window.partitionBy(symbol).orderBy(...)`; the
-  * testdata is single-symbol like the reference (config.py:21).
+  * aggregation plus (for z) the linear prefix-sum kernel [[RollingZ]] over
+  * exact integer cents — so Catalyst gets map-side partial aggregation and
+  * whole-stage codegen. At cluster scale the z window is partitioned by
+  * symbol (`flow_zscore_keyed`, `fused_multi`); the testdata is
+  * single-symbol like the reference (config.py:21).
   */
 object Flow {
   import graft.sources.Tables.BuySql
@@ -38,8 +40,17 @@ object Flow {
       .groupBy(expr(s"ts_us div $DeltaBucketUs").as("bucket"))
       .agg(
         sum(when($"is_buy", $"value").otherwise(0.0)).as("buy_vol"),
-        sum(when(!$"is_buy", $"value").otherwise(0.0)).as("sell_vol"))
+        sum(when(!$"is_buy", $"value").otherwise(0.0)).as("sell_vol"),
+        DeltaCents.as("dc"))
       .withColumn("delta", $"buy_vol" - $"sell_vol")
+  }
+
+  /** Taker delta in exact integer cents (`value` has 2-decimal
+    * provenance, FIXTURES.md §B): the LONG input of [[RollingZ]]. An
+    * aggregate over [[Tables.eventsWithSide]] rows. */
+  private[operators] val DeltaCents: Column = {
+    val cents = round(col("value") * 100).cast("long")
+    sum(when(col("is_buy"), cents).otherwise(-cents))
   }
 
   private[operators] val deltaSql: String =
@@ -55,25 +66,10 @@ object Flow {
     * the entry signal (config.py:66). */
   private[operators] def zscoreDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Single logical symbol => global ordering, mirroring the reference's one
-    // population deque. Multi-symbol data would partitionBy(symbol) here.
-    val w = Window.orderBy($"bucket").rowsBetween(-2999, 0)
-    // round(6): (delta - mu) cancels to ~1e-2 while the inputs are O(1e2),
-    // so engine-different summation trees diverge past the compare
-    // tolerance on ~1/10k rows; quantizing the *output* keeps the check
-    // exact without changing the estimator (same fix as Keyed.zscoreKeyed).
-    // mu/sigma are intermediate diagnostics, not part of the contract —
-    // their raw values can land exactly on a quantization half-boundary,
-    // so they stay internal (the keyed variant's output shape).
+    // Single logical symbol => one global population, like the reference's
+    // deque; the keyed twins partition the same kernel by shard/symbol.
     deltaDf(spark, dir)
-      .withColumn("mu", avg($"delta").over(w))
-      .withColumn("sigma", stddev_pop($"delta").over(w))
-      .withColumn("n_pop", count(lit(1)).over(w))
-      .withColumn(
-        "z",
-        when(
-          $"n_pop" >= 30 && $"sigma" > 0,
-          round(($"delta" - $"mu") / $"sigma", 6)))
+      .withColumn("z", RollingZ.z($"dc", $"bucket"))
       .withColumn(
         "signal",
         when($"z" >= 2.1, "LONG").when($"z" <= -2.1, "SHORT").otherwise("NONE"))
@@ -227,9 +223,9 @@ object Flow {
       .withColumn("recent_rate", $"qty" / 3600.0)
       // round(6) on the ratio outputs: moving-frame sum/count then a ratio
       // of ratios — engine-different summation trees diverge past the
-      // compare tolerance (same quantization rationale as zscoreDf).
-      // baseline_rate stays internal (same half-boundary hazard as
-      // zscoreDf's mu); the contract is the clamped vol_factor.
+      // compare tolerance (the same round(6) every output z gets).
+      // baseline_rate stays internal: a raw mean can land exactly on a
+      // round(6) half-boundary; the contract is the clamped vol_factor.
       .withColumn(
         "baseline_raw",
         sum($"qty").over(w) / (count(lit(1)).over(w) * 3600.0))
@@ -722,7 +718,7 @@ object Flow {
     "flow_roll_spread" -> (rollDf(_, _)),
     "flow_amihud" -> (amihudDf(_, _)),
     "flow_range_window" -> (rangeWindowDf(_, _)),
-    "flow_delta" -> (deltaDf(_, _)),
+    "flow_delta" -> (deltaDf(_, _).drop("dc")),
     "flow_zscore" -> (zscoreDf(_, _)),
     "flow_cvd" -> (cvdDf(_, _)),
     "flow_lv" -> (lvDf(_, _)),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.RollingZ
 import graft.sources.Tables
 import graft.OpModule
 
@@ -28,23 +29,13 @@ object Keyed extends OpModule {
 
   private def zscoreKeyedDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"shard").orderBy($"bucket")
-      .rowsBetween(-2999, 0)
     Tables.eventsWithSide(spark, dir)
       .withColumn("shard", $"user_id" % Shards)
       .groupBy($"shard", expr(s"ts_us div ${Flow.DeltaBucketUs}").as("bucket"))
       .agg((sum(when($"is_buy", $"value").otherwise(0.0)) -
-        sum(when(!$"is_buy", $"value").otherwise(0.0))).as("delta"))
-      .withColumn("mu", avg($"delta").over(w))
-      .withColumn("sigma", stddev_pop($"delta").over(w))
-      .withColumn("n_pop", count(lit(1)).over(w))
-      // round(6): (delta - mu) cancels to ~1e-2 while the inputs are
-      // O(1e2), so engine-different summation trees diverge past the
-      // compare tolerance on ~1/10k rows; quantizing the *output* keeps
-      // the check exact without changing the estimator
-      .withColumn("z",
-        when($"n_pop" >= 30 && $"sigma" > 0,
-          round(($"delta" - $"mu") / $"sigma", 6)))
+        sum(when(!$"is_buy", $"value").otherwise(0.0))).as("delta"),
+        Flow.DeltaCents.as("dc"))
+      .withColumn("z", RollingZ.z($"dc", $"bucket", Some($"shard")))
       .select("shard", "bucket", "delta", "z")
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.RollingZ
 import graft.sources.Tables
 import graft.state.Fsm
 import graft.state.Fsm.FsmIn
@@ -54,20 +55,20 @@ object MultiSym extends OpModule {
         max_by($"value", $"event_id").as("close"),
         sum($"value").as("volume"),
         sum(when($"is_buy", $"value").otherwise(0.0)).as("buy_vol"),
-        sum(when(!$"is_buy", $"value").otherwise(0.0)).as("sell_vol"))
+        sum(when(!$"is_buy", $"value").otherwise(0.0)).as("sell_vol"),
+        Flow.DeltaCents.as("dc"))
   }
 
   /** The keyed signal frame: every window partitions by symbol. Formula
-    * sources: ATR/rv = [[Bars.atrDf]]; z = [[Flow.zscoreDf]] (ddof 0,
-    * min pop 30, round-6 output quantization — same cross-engine
-    * rationale); CVD = [[Flow]]'s clamp; lv = the bar-grain analog
+    * sources: ATR/rv = [[Bars.atrDf]]; z = [[RollingZ]] per symbol over
+    * the hour's delta in cents (the kernel behind [[Flow.zscoreDf]]);
+    * CVD = [[Flow]]'s clamp; lv = the bar-grain analog
     * volume/(high-low+eps) ([[graft.state.Fusion.step]]). */
   private def sigDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val wS = Window.partitionBy($"symbol").orderBy($"bucket")
     val wAtr = wS.rowsBetween(-(Bars.AtrN - 1), 0)
     val wRv = wS.rowsBetween(-(Bars.RvN - 1), 0)
-    val wZ = wS.rowsBetween(-2999, 0)
     kbarsDf(spark, dir)
       .withColumn("pc", lag($"close", 1).over(wS))
       .withColumn("tr",
@@ -81,12 +82,7 @@ object MultiSym extends OpModule {
         when($"n_tr" >= Bars.AtrN, avg($"tr").over(wAtr) / $"close")
           .otherwise($"rv"))
       .withColumn("delta", $"buy_vol" - $"sell_vol")
-      .withColumn("mu", avg($"delta").over(wZ))
-      .withColumn("sigma", stddev_pop($"delta").over(wZ))
-      .withColumn("n_pop", count(lit(1)).over(wZ))
-      .withColumn("z",
-        when($"n_pop" >= 30 && $"sigma" > 0,
-          round(($"delta" - $"mu") / $"sigma", 6)))
+      .withColumn("z", RollingZ.z($"dc", $"bucket", Some($"symbol")))
       .withColumn("cvd",
         coalesce(
           least(greatest($"delta" /

@@ -233,10 +233,11 @@ object Streams {
   /** Rolling z-score with the batch estimator's exact semantics: keyed
     * state holds the trailing-3000 delta ring (~24 KB/symbol, the
     * reference's population deque), so the live population is the same
-    * trailing window as the batch `rowsBetween(-2999, 0)` frame (ddof=0,
-    * min 30) — not a growing-window approximation that drifts from the
-    * replay. Moments are recomputed over the ring per finalized window
-    * — O(3000) doubles once per 10 s per symbol, deliberately chosen
+    * trailing 3000 rows as the batch kernel [[graft.functions.RollingZ]]
+    * (ddof=0, min 30; there exact integer-cent prefix sums differenced
+    * 3000 rows back) — not a growing-window approximation that drifts
+    * from the replay. Moments are recomputed over the ring per finalized
+    * window — O(3000) doubles once per 10 s per symbol, deliberately chosen
     * over a Welford add-remove running form: exact, drift-free, and
     * negligible at window cadence (this is NOT a per-tick cost). Rows
     * within a trigger fold in event-time order. */

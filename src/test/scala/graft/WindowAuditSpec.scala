@@ -1,9 +1,19 @@
 package graft
 
-import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{CurrentRow, Expression,
+  RowFrame, SpecialFrameBoundary, SpecifiedWindowFrame, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import graft.functions.{DfMemo, RollingZ}
 
 /** Audit of single-partition window stages across EVERY declared query
   * (VERDICT r16 #4): a `Window.orderBy` with no partitionBy moves its
@@ -24,6 +34,13 @@ import org.apache.spark.sql.execution.window.WindowExec
   *
   * AQE is disabled for the snapshot (AdaptiveSparkPlanExec hides its
   * inner plan from collect()); the plan shape under audit is identical.
+  *
+  * A second pass guards frame WIDTH: a moving ROWS frame (both bounds
+  * fixed offsets) that carries an aggregate function is re-aggregated
+  * over its whole buffer for every row, O(rows × width). The widest
+  * legitimate ones are 60 rows (Bars `Lookback`, Trend `NormWin`); the
+  * 3000-row z-score frame that cost most of a market pass is now the
+  * linear [[RollingZ]] kernel, and this pass keeps it from coming back.
   */
 class WindowAuditSpec extends SparkSpec {
 
@@ -93,5 +110,78 @@ class WindowAuditSpec extends SparkSpec {
           "(prove the framed input is domain-bounded and add to the " +
           "allowlist + PLANS.md, or partition/two-level the window)")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+  }
+
+  /** Widest moving ROWS frame an aggregate may carry. */
+  private val MaxMovingRows = 256L
+
+  private def bound(e: Expression): Option[Long] = e match {
+    case CurrentRow => Some(0L)
+    case _: SpecialFrameBoundary => None // unbounded: a growing prefix
+    case x if x.foldable => Some(x.eval().asInstanceOf[Number].longValue)
+    case _ => None
+  }
+
+  /** Aggregate window expressions over moving ROWS frames wider than
+    * [[MaxMovingRows]], as "width: expression". */
+  private def wideFrames(w: WindowExec): Seq[String] =
+    w.windowExpression.flatMap(_.collect {
+      case we @ WindowExpression(_: AggregateExpression, spec) => (we, spec)
+    }).flatMap { case (we, spec) =>
+      spec.frameSpecification match {
+        case SpecifiedWindowFrame(RowFrame, lo, hi) =>
+          (for (l <- bound(lo); h <- bound(hi)) yield h - l + 1)
+            .filter(_ > MaxMovingRows).map(n => s"$n rows: ${we.sql}")
+        case _ => None
+      }
+    }
+
+  /** Every WindowExec of a plan, looking through cached (persisted
+    * memo) frames and adaptive wrappers into the plans that built them. */
+  private def windowsOf(p: SparkPlan): Seq[WindowExec] =
+    p.collectWithSubqueries {
+      case w: WindowExec => Seq(w)
+      case m: InMemoryTableScanExec => windowsOf(m.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => windowsOf(a.executedPlan)
+    }.flatten
+
+  private def wideIn(df: DataFrame): Seq[String] =
+    windowsOf(df.queryExecution.executedPlan).flatMap(wideFrames)
+
+  test("no aggregate over a moving ROWS frame wider than 256 rows, " +
+      "memo frames included") {
+    import spark.implicits._
+    // the guard must see the old quadratic frame, and not the kernel
+    val xs = (0L until 40L).toDF("x")
+    val old = xs.withColumn("m",
+      avg($"x").over(Window.orderBy($"x").rowsBetween(-2999, 0)))
+    assert(wideIn(old).exists(_.startsWith("3000 rows")), wideIn(old))
+    assert(wideIn(xs.withColumn("z", RollingZ.z($"x", $"x"))).isEmpty)
+
+    // persist-mode memo keeps each shared frame's plan behind its cache
+    // scan (local mode truncates it), so frames built inside a memo
+    // (the fusion and multi-symbol signals) are walked too
+    val dir = sfDir()
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    val modeWas = sys.props.get("graft.memo.mode")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sys.props("graft.memo.mode") = "persist"
+    DfMemo.clear()
+    try {
+      val wide = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+        case (name, fn) =>
+          wideIn(fn(spark, dir)).distinct.map(f => s"$name: $f")
+      }
+      if (wide.nonEmpty) fail(
+        s"moving ROWS frames wider than $MaxMovingRows rows re-aggregate " +
+          s"per row (O(rows × width)); use a prefix-sum form like " +
+          s"RollingZ:\n${wide.mkString("\n")}")
+    } finally {
+      modeWas.fold(sys.props.remove("graft.memo.mode"))(
+        sys.props.put("graft.memo.mode", _))
+      DfMemo.clear()
+      spark.catalog.clearCache()
+      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    }
   }
 }
