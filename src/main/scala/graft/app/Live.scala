@@ -1,8 +1,9 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import scala.jdk.CollectionConverters._
 import graft.state.Fsm.FsmIn
 import graft.streaming.Streams
 import graft.streaming.Streams.Trade
@@ -30,13 +31,20 @@ import graft.streaming.Streams.Trade
   *    a single `_SUCCESS`-marker stat — O(1), never a table scan — and a
   *    half-written partition from a crash is replaced wholesale because
   *    the batch write is `overwrite` into its own directory.
+  *  - One facts job per micro-batch: a single aggregate over the cached
+  *    batch returns its row count, its per-day exit sufficient statistics
+  *    and the rate-limit windows it touched. It also materializes the
+  *    cache, so the upstream state stores commit even when the batch is
+  *    empty or a replay; an empty batch runs no other job.
   *  - Derived-table refreshes consume ONLY the batch's rows: the Daily
-  *    Summary merges per-day sufficient statistics (sums/counts/extrema,
-  *    all associative) into a tiny day-keyed stats table; the orders
-  *    table recomputes only the rate-limit windows the batch touched,
-  *    via partition-pruned reads and a per-partition rename-aside swap
-  *    — the poor-man's MERGE (production would use a transactional
-  *    format).
+  *    Summary merges the per-day statistics (sums/counts/extrema, all
+  *    associative) on the driver into a tiny day-keyed stats table, one
+  *    row per calendar day; the orders table recomputes only the
+  *    rate-limit windows the batch touched, via reads of just those
+  *    partitions and a per-partition rename-aside swap — the poor-man's
+  *    MERGE (production would use a transactional format). A batch with
+  *    rows runs six jobs: facts, the trades append, the stats read, the
+  *    stats and summary writes, and the orders write.
   *  - A pending-refresh marker written BEFORE the batch append makes the
   *    append+refresh pair atomic-in-effect: a crash anywhere between is
   *    healed on the next batch by re-running the refreshes from the
@@ -290,23 +298,62 @@ object Live {
     * the 12-column Daily Summary derives from them exactly
     * ([[summaryOfStats]] vs [[graft.operators.Stateful.dailySummaryOf]],
     * asserted equivalent in AppSpec). */
-  private[app] def statsOf(exits: DataFrame): DataFrame =
-    exits
-      .groupBy(expr("bucket div 24").as("day"))
-      .agg(
-        count(lit(1)).as("n_trades"),
-        sum(when(col("pnl") > 0.0, 1L).otherwise(0L)).as("wins"),
-        sum(when(col("pnl") <= 0.0, 1L).otherwise(0L)).as("losses"),
-        sum(col("pnl")).as("total_pnl"),
-        max(col("pnl")).as("max_pnl"),
-        min(col("pnl")).as("min_pnl"),
-        sum(when(col("pnl") > 0.0, col("pnl")).otherwise(0.0)).as("sum_win"),
-        sum(when(col("pnl") <= 0.0, col("pnl")).otherwise(0.0)).as("sum_loss"),
-        sum((col("bucket") - col("entry_bucket")).cast("double"))
-          .as("sum_hold"))
+  private[app] def statsOf(exits: DataFrame): DataFrame = {
+    val aggs = statAggs(lit(true))
+    exits.groupBy(DayOf).agg(aggs.head, aggs.tail: _*)
+  }
 
-  private val StatCols = Seq("n_trades", "wins", "losses", "total_pnl",
-    "max_pnl", "min_pnl", "sum_win", "sum_loss", "sum_hold")
+  private val DayOf = expr("bucket div 24").as("day")
+
+  /** The per-day exit statistics over the rows where `exit` holds — the
+    * one definition [[statsOf]] (every row an exit) and [[factsOf]] (a
+    * whole batch) share, so both feed the merge identical aggregates. */
+  private def statAggs(exit: Column) = {
+    def ex(c: Column) = when(exit, c)
+    Seq(
+      count(ex(lit(1))).as("n_trades"),
+      sum(ex(when(col("pnl") > 0.0, 1L).otherwise(0L))).as("wins"),
+      sum(ex(when(col("pnl") <= 0.0, 1L).otherwise(0L))).as("losses"),
+      sum(ex(col("pnl"))).as("total_pnl"),
+      max(ex(col("pnl"))).as("max_pnl"),
+      min(ex(col("pnl"))).as("min_pnl"),
+      sum(ex(when(col("pnl") > 0.0, col("pnl")).otherwise(0.0))).as("sum_win"),
+      sum(ex(when(col("pnl") <= 0.0, col("pnl")).otherwise(0.0))).as("sum_loss"),
+      sum(ex((col("bucket") - col("entry_bucket")).cast("double")))
+        .as("sum_hold"))
+  }
+
+  /** The `daily_stats` layout: `day`, the nine statistics, `last_batch`. */
+  private[app] val StatsSchema = {
+    import org.apache.spark.sql.types._
+    StructType(
+      Seq("day", "n_trades", "wins", "losses").map(StructField(_, LongType)) ++
+        Seq("total_pnl", "max_pnl", "min_pnl", "sum_win", "sum_loss",
+          "sum_hold").map(StructField(_, DoubleType)) :+
+        StructField("last_batch", LongType))
+  }
+
+  /** What the commit needs to know about a micro-batch: its row count,
+    * its per-day exit statistics (rows of [[statsOf]]'s layout) and the
+    * rate-limit windows it touched. */
+  private[app] case class BatchFacts(rows: Long, stats: Seq[Row],
+      windows: Seq[Int])
+
+  /** [[BatchFacts]] of a trades batch from ONE aggregate, grouped by day
+    * and collected: at most one row per calendar day the batch spans. */
+  private[app] def factsOf(batch: DataFrame): BatchFacts = {
+    val days = batch.groupBy(DayOf)
+      .agg(count(lit(1)).as("rows"), (statAggs(col("action") === "EXIT") :+
+        collect_set(expr("int(bucket div 60)")).as("windows")): _*)
+      .collect()
+    val statCols = StatsSchema.fieldNames.init.toSeq
+    BatchFacts(
+      days.map(_.getAs[Long]("rows")).sum,
+      days.filter(_.getAs[Long]("n_trades") > 0).toSeq
+        .map(r => Row.fromSeq(statCols.map(r.getAs[Any]))),
+      days.flatMap(r => r.getSeq[Int](r.fieldIndex("windows")))
+        .distinct.sorted.toSeq)
+  }
 
   /** The full 12-column Daily Summary (the schema `fsm_daily_summary` is
     * hash-checked against) from the sufficient-stats table. Null
@@ -330,14 +377,27 @@ object Live {
       (col("sum_hold") / col("n_trades")).as("avg_hold"))
   }
 
-  /** MERGE the batch's per-day stats into the running stats table and
-    * re-derive the summary. Reads touch only the stats/summary tables
-    * (O(days), bounded by calendar time) and the batch itself — NEVER
-    * the trades table. The per-day `last_batch` watermark makes a healed
-    * replay of the same batch a no-op. */
+  /** MERGE one batch's exits into the Daily Summary: the entry for the
+    * heal path and direct callers, which feeds [[statsOf]] of the exits
+    * to [[mergeDailyStats]] — the same merge the live batch runs on its
+    * [[factsOf]] statistics. Reads touch only the stats table and the
+    * batch itself — NEVER the trades table. */
   def refreshDailySummary(spark: SparkSession, outDir: String,
-      batchExits: DataFrame, batchId: Long): Unit = {
-    val fresh = statsOf(batchExits)
+      batchExits: DataFrame, batchId: Long): Unit =
+    mergeDailyStats(spark, outDir, statsOf(batchExits).collect().toSeq,
+      batchId)
+
+  /** The one Daily Summary merge. `fresh` holds a batch's per-day exit
+    * statistics ([[statsOf]]'s layout). The stats table is read with its
+    * explicit schema and merged on the driver: each side holds at most one
+    * row per calendar day, so the rows collected are O(days) — the days
+    * the stats table covers plus the days the batch spans, bounded by
+    * calendar time and independent of trade volume. `daily_stats` and
+    * `daily_summary` ([[summaryOfStats]] of the same merged rows) are then
+    * written through [[swapInPlace]]. The per-day `last_batch` watermark
+    * makes a healed replay of the same batch a no-op. */
+  private[app] def mergeDailyStats(spark: SparkSession, outDir: String,
+      fresh: Seq[Row], batchId: Long): Unit = {
     if (fresh.isEmpty) return
     // heal BEFORE the existence check below: a crash inside a prior swap
     // leaves the stats in the backup dir, and treating that as "no stats
@@ -345,41 +405,51 @@ object Live {
     healSwapped(outDir, "daily_stats")
     healSwapped(outDir, "daily_summary")
     val statsPath = s"$outDir/daily_stats"
-    val merged =
-      if (!new java.io.File(statsPath).exists())
-        fresh.withColumn("last_batch", lit(batchId))
-      else {
-        val o = spark.read.parquet(statsPath)
-          .select(col("day") +: ("last_batch" +: StatCols)
-            .map(c => col(c).as(s"o_$c")): _*)
-        val n = fresh
-          .select(col("day") +: StatCols.map(c => col(c).as(s"n_$c")): _*)
-        val j = o.join(n, Seq("day"), "full_outer")
-        // stale: this batch already merged into this day (heal replay)
-        val stale = col("o_last_batch").isNotNull &&
-          col("o_last_batch") >= lit(batchId)
-        def pick(c: String, combined: org.apache.spark.sql.Column) =
-          when(col(s"n_$c").isNull, col(s"o_$c"))
-            .when(col(s"o_$c").isNull, col(s"n_$c"))
-            .when(stale, col(s"o_$c"))
-            .otherwise(combined).as(c)
-        j.select(
-          col("day"),
-          pick("n_trades", col("o_n_trades") + col("n_n_trades")),
-          pick("wins", col("o_wins") + col("n_wins")),
-          pick("losses", col("o_losses") + col("n_losses")),
-          pick("total_pnl", col("o_total_pnl") + col("n_total_pnl")),
-          pick("max_pnl", greatest(col("o_max_pnl"), col("n_max_pnl"))),
-          pick("min_pnl", least(col("o_min_pnl"), col("n_min_pnl"))),
-          pick("sum_win", col("o_sum_win") + col("n_sum_win")),
-          pick("sum_loss", col("o_sum_loss") + col("n_sum_loss")),
-          pick("sum_hold", col("o_sum_hold") + col("n_sum_hold")),
-          when(col("n_n_trades").isNull || stale, col("o_last_batch"))
-            .otherwise(lit(batchId)).as("last_batch"))
-      }
+    val old =
+      if (!new java.io.File(statsPath).exists()) Seq.empty
+      else spark.read.schema(StatsSchema).parquet(statsPath).collect().toSeq
+    val merged = spark.createDataFrame(
+      mergeStatRows(old, fresh, batchId).asJava, StatsSchema).coalesce(1)
     swapInPlace(outDir, "daily_stats", merged)
-    swapInPlace(outDir, "daily_summary",
-      summaryOfStats(spark.read.parquet(statsPath)))
+    swapInPlace(outDir, "daily_summary", summaryOfStats(merged))
+  }
+
+  /** Per-day merge with the rules of a full outer join on `day`: a day on
+    * one side only keeps that side's row; a day on both is kept as it is
+    * when stale (its `last_batch` >= `batchId`: this batch already merged
+    * into it, a healed replay), else each statistic combines — sums add,
+    * extrema take the greatest/least in SQL double order, a NULL side
+    * yields the other — and `last_batch` advances to `batchId`, which
+    * happens only on days the batch touched. Rows come back day-ordered. */
+  private def mergeStatRows(old: Seq[Row], fresh: Seq[Row],
+      batchId: Long): Seq[Row] = {
+    val stats = StatsSchema.fieldNames.toSeq.tail.init
+    val lastBatch = stats.length + 1
+    def cmp(a: Double, b: Double) =
+      if (a == b) 0 else java.lang.Double.compare(a, b)
+    def combine(stat: String, o: Any, n: Any): Any = (o, n) match {
+      case (o, null) => o
+      case (null, n) => n
+      case (o: Long, n: Long) => o + n
+      case (o: Double, n: Double) => stat match {
+        case "max_pnl" => if (cmp(n, o) > 0) n else o
+        case "min_pnl" => if (cmp(n, o) < 0) n else o
+        case _ => o + n
+      }
+    }
+    val byDay = fresh.map(r => r.getLong(0) -> r).toMap
+    val oldDays = old.map(_.getLong(0)).toSet
+    val kept = old.map { o =>
+      byDay.get(o.getLong(0)) match {
+        case Some(n) if o.isNullAt(lastBatch) || o.getLong(lastBatch) < batchId =>
+          Row.fromSeq(o.get(0) +: stats.indices.map(i =>
+            combine(stats(i), o.get(i + 1), n.get(i + 1))) :+ batchId)
+        case _ => o
+      }
+    }
+    val added = fresh.filterNot(r => oldDays(r.getLong(0)))
+      .map(r => Row.fromSeq(r.toSeq :+ batchId))
+    (kept ++ added).sortBy(_.getLong(0))
   }
 
   /** Max orders per rate window (reference config.py:56). */
@@ -435,35 +505,45 @@ object Live {
   /** Incrementally refresh the orders table: recompute ONLY the rate
     * windows the batch touched. Prior events for those windows come back
     * from the orders table itself (each order row carries its FSM-event
-    * key), read partition-pruned on `rate_win`; each recomputed window
-    * then replaces its partition directory via the same rename-aside
-    * swap the small tables use — crash-safe per window (a dynamic
-    * partition overwrite is NOT: a crash between its delete and move
-    * loses the window's PRIOR batches, and the heal replay would then
-    * recompute from the corrupted partition). Per-batch work is
-    * O(batch + touched windows), independent of orders-table size.
-    * Idempotent: the input set dedupes on the deterministic event key,
-    * so a healed replay recomputes identical partitions. */
+    * key), read with an explicit schema from just the touched partition
+    * directories; each recomputed window then replaces its partition
+    * directory via the same rename-aside swap the small tables use —
+    * crash-safe per window (a dynamic partition overwrite is NOT: a crash
+    * between its delete and move loses the window's PRIOR batches, and
+    * the heal replay would then recompute from the corrupted partition).
+    * Per-batch work is O(batch + touched windows), independent of
+    * orders-table size. Idempotent: the input set dedupes on the
+    * deterministic event key, so a healed replay recomputes identical
+    * partitions. This entry collects the touched windows itself; the live
+    * batch passes the ones its [[factsOf]] job already returned. */
   def refreshOrders(spark: SparkSession, outDir: String,
       batchEvents: DataFrame, batchId: Long): Unit = {
     import spark.implicits._
+    refreshOrderWindows(spark, outDir, batchEvents,
+      batchEvents.select(expr("int(bucket div 60)")).distinct()
+        .as[Int].collect().toSeq)
+  }
+
+  /** [[refreshOrders]] over the batch's touched rate windows `wins` (a
+    * tiny driver-side list, bounded by the batch's time span). */
+  private[app] def refreshOrderWindows(spark: SparkSession, outDir: String,
+      batchEvents: DataFrame, wins: Seq[Int]): Unit = {
+    if (wins.isEmpty) return
     val keyCols = EventKey
     val fresh = batchEvents.select(keyCols.map(col): _*)
-    if (fresh.isEmpty) return
     val ordersDir = new java.io.File(s"$outDir/orders")
     healOrderPartitions(ordersDir)
-    // touched windows: a tiny driver-side list (bounded by the batch's
-    // time span), used as a partition-pruning literal — not a data fetch
-    val wins = fresh.select(expr("int(bucket div 60)")).distinct()
-      .as[Int].collect()
+    val priorDirs = wins.map(w => new java.io.File(ordersDir, s"rate_win=$w"))
+      .filter(_.exists())
     val prior =
-      if (ordersDir.exists())
-        spark.read.parquet(ordersDir.toString)
-          .filter(col("rate_win").isin(wins.map(Int.box): _*))
-          .select(keyCols.map(col): _*)
-      else fresh.limit(0)
+      if (priorDirs.isEmpty) fresh.limit(0)
+      else spark.read.schema(EventKeySchema)
+        .parquet(priorDirs.map(_.toString): _*)
+    // one task for the union, dedup and rank: the input is the touched
+    // windows only, and a single partition satisfies both the dedup's
+    // and the per-window rank's distribution, so the plan has no shuffle
     val recomputed = ordersOf(
-      prior.unionByName(fresh).dropDuplicates(keyCols))
+      prior.unionByName(fresh).coalesce(1).dropDuplicates(keyCols))
     // write the recomputed windows fully aside, then swap each touched
     // partition directory in: backup the old dir, move the new one in,
     // drop the backup — any crash leaves either the old or the new dir
@@ -509,6 +589,13 @@ object Live {
     * (order_id derives from it). Shared by the orders refresh dedup, the
     * compaction merge, and the union view below. */
   private[graft] val EventKey = Seq("symbol", "bucket", "action", "side")
+
+  private val EventKeySchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("symbol", StringType),
+      StructField("bucket", LongType), StructField("action", StringType),
+      StructField("side", StringType)))
+  }
 
   /** The live trades table for consumers: committed recent micro-batch
     * partitions ∪ the day-keyed archive, exactly-once through every
@@ -602,33 +689,50 @@ object Live {
       .option("checkpointLocation", s"$ckptDir/trades")
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.state.Fsm.FsmEvent], batchId: Long) =>
-        healPending(spark, outDir) // crash in an EARLIER batch's refresh
-        val df = batch.toDF().cache()
-        try {
-          // evaluate the batch UNCONDITIONALLY: the upstream stateful
-          // operators must run their tasks (and commit their state
-          // stores) even when the sink-side commit is skipped as a
-          // replay — only the side effects below are guarded
-          val rows = df.count()
-          if (rows > 0 && !alreadyCommitted(spark, outDir, batchId)) {
-            // refuse BEFORE the marker when fenced: a stale writer must
-            // not even re-arm the pending-refresh heal path
-            BatchSink.checkLease(lease)
-            // marker BEFORE the append: a crash anywhere up to the
-            // marker delete re-runs the (idempotent) refreshes
-            markPending(outDir, batchId)
-            BatchSink.commitFenced(df, lease, batchId)
-            refreshDailySummary(spark, outDir,
-              df.filter(col("action") === "EXIT"), batchId)
-            refreshOrders(spark, outDir, df, batchId)
-            pendingFile(outDir).delete()
-          }
-          // empty or replayed batch: nothing to append, nothing to refresh
-        } finally df.unpersist()
-        ()
+        sinkTradesBatch(spark, outDir, lease, batch.toDF(), batchId)
       }
       .start()
   }
+
+  /** One trades micro-batch through the commit protocol (the object doc):
+    * lease check, pending marker, fenced append, the Daily Summary and
+    * orders refreshes, marker delete. */
+  private[graft] def sinkTradesBatch(spark: SparkSession, outDir: String,
+      lease: BatchSink.WriterLease, batch: DataFrame, batchId: Long): Unit = {
+    healPending(spark, outDir) // crash in an EARLIER batch's refresh
+    val df = batch.cache()
+    try {
+      // evaluate the batch UNCONDITIONALLY: the facts job materializes the
+      // cache, so the upstream stateful operators run their tasks (and
+      // commit their state stores) even when the sink-side commit is
+      // skipped as a replay — only the side effects below are guarded
+      val facts = factsOf(df)
+      if (facts.rows > 0 && !alreadyCommitted(spark, outDir, batchId)) {
+        // refuse BEFORE the marker when fenced: a stale writer must
+        // not even re-arm the pending-refresh heal path
+        BatchSink.checkLease(lease)
+        // marker BEFORE the append: a crash anywhere up to the
+        // marker delete re-runs the (idempotent) refreshes
+        markPending(outDir, batchId)
+        BatchSink.commitFenced(df, lease, batchId)
+        mergeDailyStats(spark, outDir, facts.stats, batchId)
+        refreshOrderWindows(spark, outDir, df, facts.windows)
+        pendingFile(outDir).delete()
+      }
+      // empty or replayed batch: nothing to append, nothing to refresh
+    } finally df.unpersist()
+    ()
+  }
+
+  /** Block until any of `qs` terminates, then stop the others. A failed
+    * query's exception is rethrown, so one dead stream ends the app
+    * instead of leaving it waiting on the healthy ones. `qs` must be the
+    * only queries `spark` has run: `spark.streams` remembers the last
+    * termination since its last `resetTerminated()`. */
+  private[graft] def awaitAnyThenStop(spark: SparkSession,
+      qs: Seq[StreamingQuery]): Unit =
+    try spark.streams.awaitAnyTermination()
+    finally qs.filter(_.isActive).foreach(_.stop())
 
   def main(args: Array[String]): Unit = {
     // 4-arg: trade-only; optional 5th arg: a book-update feed directory
@@ -654,6 +758,6 @@ object Live {
       fusedQuery(spark, tradesDir, outDir, ckptDir, booksDir),
       lvQuery(spark, tradesDir, outDir, ckptDir),
       tradesQuery(spark, signalsDir, outDir, ckptDir))
-    qs.foreach(_.awaitTermination())
+    awaitAnyThenStop(spark, qs)
   }
 }
