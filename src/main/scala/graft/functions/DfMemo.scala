@@ -11,26 +11,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `clear()`. Within a session the memo is an LRU bounded at
   * [[MaxResident]] entries: a long multi-family run (Bench's 70+ queries)
   * holds at most that many persisted frames at a time — the
-  * least-recently-used one is unpersisted and forgotten when a new family
-  * starts memoizing, instead of every family's frames accumulating for
-  * the whole session (the round-2 bench-noise mechanism). Bench runs
-  * queries in name order, so a family's queries touch their shared memo
-  * consecutively and the LRU never thrashes within a family.
+  * least-recently-used one is forgotten (its reference dropped; see
+  * `cached`) when a new family starts memoizing, instead of every
+  * family's frames accumulating for the whole session (the round-2
+  * bench-noise mechanism). Name order keeps a family's queries
+  * consecutive, but that only stops thrashing when the family's working
+  * set fits the cap: a working set above it, touched in the same cyclic
+  * order every pass, evicts frames just before their next use, so every
+  * repeat pass rebuilds most of them (see the measured working sets on
+  * [[MaxResident]]).
   */
 object DfMemo {
 
-  /** LRU cap per session. Large enough for the widest reuse distance in
-    * the suite. Through r16 that was the ANN family (10 live: the PQ
-    * rung's ivf_ranked / kmeans_comp / kmeans_ranked / kmeans2_ranked /
-    * multi_sig / pq_rsub / pq_cb / pq_code plus ann_pq_topk's pq_recon
-    * + pq_approx); r17's per-(window, step) funnel memos widened the
-    * peak to 13 (funnel_ev + 4 shipped steps + 2x4 curve-window steps,
-    * all live inside one events_funnel_curve evaluation). 16 keeps
-    * spare over that peak so a single new key cannot evict a frame
-    * whose rebuild is a full scan; small enough to bound resident
-    * cache pressure. Eviction is reference-drop only (safe — see
-    * below), so an undersized cap costs rebuild time, never
-    * correctness. */
+  /** LRU cap per session. Measured working sets (distinct keys one
+    * name-ordered pass touches; a set that fits is never rebuilt on a
+    * repeat pass, one that does not is mostly rebuilt — only a frame
+    * read solely inside another frame's builder can be evicted for
+    * free):
+    *  - the ANN PQ rung, 10: ivf_ranked / kmeans_comp / kmeans_ranked /
+    *    kmeans2_ranked / multi_sig / pq_rsub / pq_cb / pq_code plus
+    *    ann_pq_topk's pq_recon + pq_approx;
+    *  - one events_funnel_curve evaluation, 13: funnel_ev + 4 shipped
+    *    steps + 2x4 curve-window steps, all live at once;
+    *  - the six-query `corpus_memo` benchmark subset, 13: fits, so a
+    *    warm pass rebuilds nothing (DfMemoSpec pins it);
+    *  - all 51 Dedup + Similarity queries in name order: 46 builds
+    *    (5 000 documents, 2 000 embeddings), far above any cap that
+    *    bounds cache pressure — a warm pass rebuilds 43 of them at 16.
+    * 16 holds every single-query and benchmark-subset set above with
+    * spare, so a single new key cannot evict a frame whose rebuild is a
+    * full scan; small enough to bound resident cache pressure. Eviction
+    * is reference-drop only (safe — see below), so an undersized cap
+    * costs rebuild time, never correctness. */
   val MaxResident: Int =
     sys.props.get("graft.memo.cap")
       .orElse(sys.env.get("SPARK_GRAFT_MEMO_CAP"))

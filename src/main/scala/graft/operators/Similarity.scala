@@ -1044,49 +1044,60 @@ object Similarity extends OpModule {
     * the built-in recall-1.0 anchor (prefix ranking == exact ranking). */
   val TruncDims = Seq(8, 16, 32, 64)
 
-  /** Stage-1 of the truncation rung: per-query top-[[TruncShortlist]]
-    * by PREFIX-d cosine (matryoshka-representation search, Kusupati et
-    * al. 2022, arXiv:2205.13147 — embedding prefixes of MRL-trained
-    * models are usable sub-embeddings; this synthetic corpus stands in
-    * for one). Prefix cosines are quantized to 6 dp before ranking
-    * (ties then break on nid) so the shortlist boundary cannot flip on
-    * engine summation order — the same guard as the IVF cell ranks.
+  /** Stage-1 of the truncation rung at every width in [[TruncDims]]:
+    * per (width, query) top-[[TruncShortlist]] by PREFIX-d cosine
+    * (matryoshka-representation search, Kusupati et al. 2022,
+    * arXiv:2205.13147 — embedding prefixes of MRL-trained models are
+    * usable sub-embeddings; this synthetic corpus stands in for one).
+    * Prefix cosines are quantized to 6 dp before ranking (ties then
+    * break on nid) so the shortlist boundary cannot flip on engine
+    * summation order — the same guard as the IVF cell ranks.
     *
     * Scale shape, MODELED in the plan, not just documented: at 100 TB
     * the d-dim prefix is its own stored column, so stage 1 reads
-    * d/[[Dim]] of the vector bytes. Here the corpus projects to the
-    * slim (nid, d-prefix) frame immediately at the scan, the prefix
-    * cosine is computed against the broadcast query prefixes, and the
-    * ARRAYS ARE DROPPED before the per-query rank exchange — the
-    * shuffle that ranks Q x N candidates carries (qid, nid, pcos)
-    * only, never a vector (the full-width arrays riding that exchange
-    * were the measured 9.7x sf1 hotspot). Stage 2 then re-fetches full
-    * vectors for only Q x [[TruncShortlist]] survivors — the
-    * fetch-the-tail pattern every two-stage retrieval system runs.
-    * The (qid, nid) shortlist is memoized per width: `ann_trunc_topk`
-    * and the width-16 rung of `ann_trunc_curve` share one build. */
-  private def truncShortDf(spark: SparkSession, dir: String,
-      d: Int): DataFrame = {
-    graft.GraftExtensions.register(spark)
-    import spark.implicits._
-    graft.functions.DfMemo.cached(spark, s"trunc_short:$d:$dir") {
+    * d/[[Dim]] of the vector bytes. Here each side projects to its
+    * (id, d-prefix, prefix norm) columns for every width immediately at
+    * the scan, ONE broadcast pass computes the four prefix cosines per
+    * (query, corpus) pair, and the ARRAYS ARE DROPPED before the rank
+    * exchange — the shuffle that ranks 4 x Q x N candidates carries
+    * (prefix_dim, qid, nid, pcos) only, never a vector (the full-width
+    * arrays riding that exchange were the measured 9.7x sf1 hotspot).
+    * Stage 2 then re-fetches full vectors for only Q x
+    * [[TruncShortlist]] survivors — the fetch-the-tail pattern every
+    * two-stage retrieval system runs. The (prefix_dim, qid, nid) frame
+    * is ONE memo entry for all widths: `ann_trunc_topk` reads its
+    * [[TruncDim]] rows, `ann_trunc_curve` all of them. */
+  private[graft] def truncShortDf(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.functions.DfMemo.cached(spark, s"trunc_short:$dir") {
+      graft.GraftExtensions.register(spark)
+      import spark.implicits._
       val e = Tables.embeddings(spark, dir)
-      val qp = e.filter(isQueryCol($"vec_id"))
-        .select($"vec_id".as("qid"), slice($"embedding", 1, d).as("qp"))
-        .withColumn("qn", sqrt(dot($"qp", $"qp")))
-      val np = e.select($"vec_id".as("nid"),
-        slice($"embedding", 1, d).as("pe"))
-        .withColumn("pn", sqrt(dot($"pe", $"pe")))
+      // (id, v<d>, n<d>) per width: the d-prefix and its norm, once per
+      // vector rather than once per pair
+      def prefixes(df: DataFrame, id: String, v: String, n: String) =
+        df.select($"vec_id".as(id) +: TruncDims.map(d =>
+            slice($"embedding", 1, d).as(s"$v$d")): _*)
+          .select(col(id) +: TruncDims.flatMap(d => Seq(col(s"$v$d"),
+            sqrt(dot(col(s"$v$d"), col(s"$v$d"))).as(s"$n$d"))): _*)
+      val qp = prefixes(e.filter(isQueryCol($"vec_id")), "qid", "qp", "qn")
+      val np = prefixes(e, "nid", "pe", "pn")
+      val pcos = TruncDims.map(d => round(dot(col(s"qp$d"), col(s"pe$d")) /
+        (col(s"qn$d") * col(s"pn$d")), 6).as(s"pcos$d"))
+      // stack, not explode(array(...)): a generator over a computed
+      // array invites an inferred pre-explode filter that re-evaluates
+      // the cosines; stack's inputs are plain columns
+      val rows = TruncDims.map(d => s"$d, pcos$d").mkString(", ")
       broadcast(qp)
         .join(np, $"nid" =!= $"qid")
+        .select($"qid" +: $"nid" +: pcos: _*)
         .select($"qid", $"nid",
-          round(dot($"qp", $"pe") / ($"qn" * $"pn"), 6).as("pcos"))
-        .withColumn("prk", row_number().over(
-          Window.partitionBy($"qid").orderBy($"pcos".desc, $"nid")))
+          expr(s"stack(${TruncDims.size}, $rows) AS (prefix_dim, pcos)"))
+        .withColumn("prk", row_number().over(Window
+          .partitionBy($"prefix_dim", $"qid").orderBy($"pcos".desc, $"nid")))
         .filter($"prk" <= TruncShortlist)
-        .select($"qid", $"nid")
+        .select($"prefix_dim", $"qid", $"nid")
     }
-  }
 
   /** ANN rung 11 (`ann_trunc_topk`): exact-cosine re-rank of the
     * [[TruncDim]]-prefix shortlist, top-3 per query — same output
@@ -1099,7 +1110,8 @@ object Similarity extends OpModule {
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(isQueryCol($"vec_id"))
       .select($"vec_id".as("q_id"), $"embedding".as("qe"))
-    broadcast(truncShortDf(spark, dir, TruncDim))
+    broadcast(truncShortDf(spark, dir)
+        .filter($"prefix_dim" === TruncDim).select($"qid", $"nid"))
       .join(e.select($"vec_id".as("nid"), $"embedding".as("ne")), "nid")
       .join(broadcast(q), $"qid" === $"q_id")
       .withColumn("cos", dot($"qe", $"ne") / (norm($"qe") * norm($"ne")))
@@ -1110,7 +1122,7 @@ object Similarity extends OpModule {
   }
 
   /** The prefix-d shortlist as SQL CTEs `pd$d` / `pnorm$d` / `short$d`
-    * (the oracle twin of [[truncShortDf]]). */
+    * (the oracle twin of [[truncShortDf]]'s width-d rows). */
   private def truncShortSqlCtes(d: Int): String =
     s"""pd$d AS (SELECT qid, e.vec_id AS nid, ${dotSql("qe", "e.embedding")} AS dt
        |      FROM q, embeddings e, range(1, ${d + 1}) t(i)
@@ -1169,22 +1181,22 @@ object Similarity extends OpModule {
     * probe sweep. Shortlist membership IS final recall for a true
     * top-3 neighbor (at most two candidates can out-rank it in the
     * exact re-rank — the same argument as the cell-geometry curves),
-    * so each width is one anti-joined aggregate of the truth against
-    * that width's shortlist; the full-width row anchors at 1.0 by
-    * construction. */
+    * so the curve is one left join of the truth, crossed with the
+    * widths, against the shared multi-width shortlist, counted per
+    * width; the full-width row anchors at 1.0 by construction. */
   private def truncCurveDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val truth = brute3Df(spark, dir)
-    TruncDims.map { d =>
-      val s = truncShortDf(spark, dir, d)
-        .select($"qid".as("s_qid"), $"nid".as("s_nid"))
-      truth
-        .join(s, $"qid" === $"s_qid" && $"nid" === $"s_nid", "left")
-        .agg(sum(when($"s_nid".isNotNull, 1L).otherwise(0L)).as("hits"),
-          count(lit(1)).as("n"))
-        .select(lit(d).as("prefix_dim"), $"hits", $"n",
-          ($"hits" / $"n").as("recall"))
-    }.reduce(_ unionByName _)
+    val s = truncShortDf(spark, dir)
+      .select($"prefix_dim".as("s_dim"), $"qid".as("s_qid"),
+        $"nid".as("s_nid"))
+    brute3Df(spark, dir)
+      .crossJoin(TruncDims.toDF("prefix_dim"))
+      .join(s, $"prefix_dim" === $"s_dim" && $"qid" === $"s_qid" &&
+        $"nid" === $"s_nid", "left")
+      .groupBy($"prefix_dim")
+      .agg(sum(when($"s_nid".isNotNull, 1L).otherwise(0L)).as("hits"),
+        count(lit(1)).as("n"))
+      .select($"prefix_dim", $"hits", $"n", ($"hits" / $"n").as("recall"))
   }
 
   private lazy val truncCurveSql: String = {
@@ -2249,9 +2261,9 @@ object Similarity extends OpModule {
     * panel query (ONE corpus scan, the knn plan), and the greedy
     * re-rank `argmax λ·cos(q,c) − (1−λ)·max_{s∈S} cos(c,s)` then runs
     * entirely on metadata-sized frames: the pool (panel×M rows) and its
-    * within-pool pairwise sims (panel×M² rows) are localCheckpointed,
-    * and each of the TopK−1 greedy steps is an anti-join + max-sim
-    * aggregation + rank-1 pick over those. At 100 TB the corpus cost is
+    * within-pool pairwise sims (panel×M² rows, memoized) are collected,
+    * and each of the TopK−1 greedy steps is a driver-side max-sim +
+    * argmax pick over those. At 100 TB the corpus cost is
     * unchanged from `knn_brute`; diversification is free by comparison.
     * The first pick carries mmr = NULL (no diversity term exists yet);
     * ties break on nid like every other rank in the family. The oracle
@@ -2260,31 +2272,29 @@ object Similarity extends OpModule {
   private def mmrTopkDf(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.register(spark)
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
     // the memoized exact ranked frame `knn_brute` also reads: panel×M
-    // rows, single-partition from here on so the greedy loop's
-    // joins/windows schedule one task per stage instead of 32
-    val pool = graft.functions.DfMemo.cached(spark, s"mmr_pool1:$dir")(
-      rankedPool(spark, dir).coalesce(1))
-    // pool members with their embeddings, memoized: un-checkpointed,
-    // the sims self-join below re-executed this pool⋈embeddings subtree
-    // on BOTH sides — two full corpus passes per bench attempt for a
-    // panel×M (≤1600-row) frame. Checkpointing it once per (session,
-    // dir) leaves the self-join running on a LogicalRDD.
-    val poolE = graft.functions.DfMemo.cached(spark, s"mmr_poole:$dir")(
-      pool.join(e.select($"vec_id".as("nid"), $"embedding".as("ne")),
-          Seq("nid"))
-        .coalesce(1))
-    // within-pool pairwise sims (panel×M² ≤ 30k rows), memoized for the
-    // same reason: every greedy step and every bench attempt re-reads it
-    val sims = graft.functions.DfMemo.cached(spark, s"mmr_sims:$dir")(
+    // rows, single-partition from here on so the collect and the sims
+    // self-join schedule one task per stage instead of 32
+    val pool = rankedPool(spark, dir).coalesce(1)
+    // within-pool pairwise sims (panel×M² ≤ 30k rows), memoized: every
+    // bench attempt re-reads it. The pool members with their embeddings
+    // are materialized once inside the build (a one-off frame, no memo
+    // slot): left as a plan, the self-join re-executed the
+    // pool⋈embeddings subtree on BOTH sides — two full corpus passes for
+    // a panel×M (≤1600-row) frame.
+    val sims = graft.functions.DfMemo.cached(spark, s"mmr_sims:$dir") {
+      val poolE = graft.functions.DfMemo.materializeFrame(spark,
+        pool.join(Tables.embeddings(spark, dir)
+            .select($"vec_id".as("nid"), $"embedding".as("ne")), Seq("nid"))
+          .coalesce(1))
       poolE.select($"qid", $"nid".as("a"), $"ne".as("ea"))
         .join(poolE.select($"qid", $"nid".as("b"), $"ne".as("eb")),
           Seq("qid"))
         .filter($"a" =!= $"b")
         .withColumn("sim", dot($"ea", $"eb") / (norm($"ea") * norm($"eb")))
         .select("qid", "a", "b", "sim")
-        .coalesce(1))
+        .coalesce(1)
+    }
     // The greedy selection itself runs ON THE DRIVER over the two
     // collected frames. Both are bounded BY CONSTRUCTION at any corpus
     // size — pool ≤ QueryPanelIds·MmrPoolM = 1600 rows, sims ≤

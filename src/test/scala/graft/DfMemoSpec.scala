@@ -1,11 +1,16 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 import graft.functions.DfMemo
 
-/** DfMemo materialization profiles (VERDICT r16 #6) and the
-  * reference-drop safety contract the LRU eviction relies on. */
+/** DfMemo materialization profiles (VERDICT r16 #6), the
+  * reference-drop safety contract the LRU eviction relies on, and the
+  * corpus queries' working set against the default cap. */
 class DfMemoSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
@@ -68,5 +73,40 @@ class DfMemoSpec extends SparkSpec {
     DfMemo.clear()
     System.gc() // give an over-eager cleaner its best shot
     assert(downstream.collect().head.getLong(0) == 1000L)
+  }
+
+  /** The `corpus_memo` benchmark queries, in the name order it runs them. */
+  private val CorpusQueries = Seq("ann_ivf_append", "ann_ivf_topk",
+    "ann_mmr_topk", "ann_trunc_curve", "dedup_jaccard_topk",
+    "dedup_minhash_pairs")
+
+  /** Memo materializations while `body` runs: Spark jobs whose call site
+    * is in DfMemo.scala (a keyed build, or a one-off frame one builds). */
+  private def memoJobs(body: => Unit): Int = {
+    val sites = new ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.stageInfos.nonEmpty) sites.add(j.stageInfos.maxBy(_.stageId).name)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    sites.asScala.count(_.contains("DfMemo.scala"))
+  }
+
+  test("working set: the six corpus queries fit the default cap, so a " +
+      "name-ordered warm pass rebuilds nothing") {
+    assert(DfMemo.MaxResident == 16)
+    DfMemo.clear()
+    def pass(): Int = memoJobs(CorpusQueries.foreach { q =>
+      SparkEntry.queries(q)(spark, sfDir())
+        .write.format("noop").mode("overwrite").save()
+    })
+    val cold = pass()
+    val warm = pass()
+    // cold: 13 keyed frames, plus the pool-with-embeddings frame the
+    // mmr_sims build materializes once and keeps no slot for; warm:
+    // every keyed frame is still resident
+    assert((cold, warm) == ((14, 0)), "(cold, warm) memo jobs")
   }
 }

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Similarity-search semantics on a constructed embedding space. */
 class SimilaritySpec extends SparkSpec {
@@ -451,6 +455,46 @@ class SimilaritySpec extends SparkSpec {
       assert(rs.map(_("nid")).distinct.size == Similarity.TopK)
       val first = rs.minBy(r => r("step").asInstanceOf[Int])
       assert(first("nid") == top1(q))
+    }
+  }
+
+  /** The per-width prefix shortlist as it was built before the widths
+    * shared one frame: one broadcast pass and one rank exchange per d. */
+  private def perWidthShortlist(dir: String, d: Int): DataFrame = {
+    GraftExtensions.register(spark)
+    import spark.implicits._
+    def dot(a: Column, b: Column) = call_function("vec_dot", a, b)
+    val e = Tables.embeddings(spark, dir)
+    val qp = e.filter(Similarity.isQueryCol($"vec_id"))
+      .select($"vec_id".as("qid"), slice($"embedding", 1, d).as("qp"))
+      .withColumn("qn", sqrt(dot($"qp", $"qp")))
+    val np = e.select($"vec_id".as("nid"),
+      slice($"embedding", 1, d).as("pe"))
+      .withColumn("pn", sqrt(dot($"pe", $"pe")))
+    broadcast(qp)
+      .join(np, $"nid" =!= $"qid")
+      .select($"qid", $"nid",
+        round(dot($"qp", $"pe") / ($"qn" * $"pn"), 6).as("pcos"))
+      .withColumn("prk", row_number().over(
+        Window.partitionBy($"qid").orderBy($"pcos".desc, $"nid")))
+      .filter($"prk" <= Similarity.TruncShortlist)
+      .select($"qid", $"nid")
+  }
+
+  test("truncation shortlist: the multi-width frame equals the per-width " +
+      "builds at every width") {
+    import spark.implicits._
+    def pairs(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    Seq("sf0.001", "sf0.01").foreach { sf =>
+      val multi = Similarity.truncShortDf(spark, sfDir(sf))
+      Similarity.TruncDims.foreach { d =>
+        val got = pairs(multi.filter($"prefix_dim" === d).select("qid", "nid"))
+        val want = pairs(perWidthShortlist(sfDir(sf), d))
+        assert(want.nonEmpty, s"$sf d=$d")
+        assert(got == want, s"$sf d=$d: ${(got diff want).take(5)} " +
+          s"vs ${(want diff got).take(5)}")
+      }
     }
   }
 }

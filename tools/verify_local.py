@@ -36,13 +36,25 @@ def kinds(df: pd.DataFrame) -> dict:
     applied identically on both sides (both come through pandas)."""
     return {c: df[c].dtype.kind for c in df.columns}
 
+# One rendering for every null in object and boolean columns: pandas
+# surfaces a SQL NULL there as None, NaN or pd.NA depending on the reader
+# (a nullable parquet boolean arrives as None, the same DuckDB column as
+# NaN), and the driver's hash sees one NULL.
+NULL = "<NULL>"
+
+def text(x) -> str:
+    if x is None or x is pd.NA or (isinstance(x, float) and x != x):
+        return NULL
+    return str(x)
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
     out = {}
     for c in df.columns:
         s = df[c]
-        if s.dtype == object:
-            out[c] = s.astype(str)
+        if (s.dtype == object or np.issubdtype(s.dtype, np.bool_)
+                or str(s.dtype) == "boolean"):
+            out[c] = s.map(text)
         elif np.issubdtype(s.dtype, np.floating):
             def rf(x):
                 if pd.isna(x):
@@ -51,8 +63,6 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
                     return "0"   # merges 0.0 / -0.0, like the old canon
                 return f"{x:.9e}" if LAX else f"{x:.9f}"
             out[c] = s.map(rf)
-        elif np.issubdtype(s.dtype, np.bool_) or str(s.dtype) == "boolean":
-            out[c] = s.astype(str)
         elif np.issubdtype(s.dtype, np.integer):
             out[c] = s.astype("int64").astype(str)
         else:
