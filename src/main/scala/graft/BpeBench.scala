@@ -4,10 +4,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** BPE training-scale bench — measures [[graft.operators.Bpe.trainOn]]
-  * at production vocabulary sizes and records the jobs-vs-N curve, so
-  * the "30k merges ≈ a ~2 h single-node job" extrapolation rests on
-  * measured points at multiple N, not one.
+/** BPE training-scale bench — measures the shipped trainer,
+  * [[graft.operators.Bpe.trainOnLocal]], at production vocabulary sizes
+  * and records the wall-vs-N curve at several N, not one.
   *
   * The corpus is a deterministic synthetic word-type table (seeded
   * LCG; 200k types, Zipf frequencies, lengths 3–12) rather than the sf
@@ -15,14 +14,13 @@ import org.apache.spark.sql.functions._
   * which is a property of the fixture, not of the trainer — a
   * production tokenizer trains on a vocabulary whose pair space
   * survives tens of thousands of merges, which is what this table
-  * models. Word-type count, not corpus bytes, is what the per-round
-  * cost depends on (the corpus is touched once; every round runs on
-  * the vocabulary-sized frame), so 200k types IS the production-scale
+  * models. Word-type count, not corpus bytes, is what training cost
+  * depends on (the corpus is touched once; training runs on the
+  * vocabulary-sized table), so 200k types IS the production-scale
   * knob.
   *
-  * Prints ONE JSON line: per-N wall seconds, accepted merges, rounds
-  * (driver loop iterations ≈ N/64) and Spark jobs. Not part of the
-  * driver contract — run manually:
+  * Prints ONE JSON line: per-N wall seconds, merges and Spark jobs.
+  * Not part of the driver contract — run manually:
   * `SPARK_GRAFT_BPE_NS=1000,4000 sbt "runMain graft.BpeBench"`.
   * Results live in PLANS.md §"text_bpe_merges".
   */
@@ -63,28 +61,18 @@ object BpeBench {
       }
     })
 
-    // engine: "local" (default — the round-14 production trainer,
-    // graft.operators.Bpe.trainLocal) or "spark" (the distributed
-    // batched loop, the pre-r14 path whose N=30k run never completed)
-    val engine = sys.env.getOrElse("SPARK_GRAFT_BPE_ENGINE", "local")
     val cells = ns.map { n =>
       val j0 = jobs.get
       val t0 = System.nanoTime()
-      val (merges, seg) =
-        if (engine == "local")
-          graft.operators.Bpe.trainOnLocal(spark, words, n, strict = false)
-        else
-          graft.operators.Bpe.trainOn(
-            spark, words, n, incremental = true, strict = false)
+      val (merges, _) =
+        graft.operators.Bpe.trainOnLocal(spark, words, n, strict = false)
       val sec = (System.nanoTime() - t0) / 1e9
-      graft.functions.DfMemo.release(seg)
-      val rounds = math.ceil(n / 64.0).toInt
-      (n, merges.size, rounds, math.round(sec * 10.0) / 10.0, jobs.get - j0)
+      (n, merges.size, math.round(sec * 10.0) / 10.0, jobs.get - j0)
     }
-    val cellJson = cells.map { case (n, m, r, s, j) =>
-      s""""$n":{"merges":$m,"rounds_max":$r,"sec":$s,"jobs":$j}"""
+    val cellJson = cells.map { case (n, m, s, j) =>
+      s""""$n":{"merges":$m,"sec":$s,"jobs":$j}"""
     }.mkString(",")
-    println(s"""{"metric":"bpe_train_scale","unit":"sec","engine":"$engine","n_types":${types.size},"cells":{$cellJson}}""")
+    println(s"""{"metric":"bpe_train_scale","unit":"sec","n_types":${types.size},"cells":{$cellJson}}""")
     spark.stop()
   }
 }

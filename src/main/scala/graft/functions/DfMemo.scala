@@ -1,5 +1,6 @@
 package graft.functions
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-(session, key) memo of persisted DataFrames, for intermediate
@@ -70,14 +71,14 @@ object DfMemo {
       .orElse(sys.env.get("SPARK_GRAFT_MEMO_MODE"))
       .getOrElse(if (spark.sparkContext.isLocal) "local" else "persist")
 
-  /** Mode-aware one-off materialization for frames that are shared
-    * WITHIN one plan but not across queries (no memo entry): same
-    * local/persist/reliable policy as the memo, so inline sharing
-    * never reintroduces unrecoverable localCheckpoint blocks off-local. */
+  /** The one place a frame is materialized, eagerly, under [[mode]]'s
+    * local/persist/reliable policy: every memo build, and every one-off
+    * frame shared WITHIN one plan or carried across loop rounds (no
+    * memo entry), so no frame ever holds unrecoverable localCheckpoint
+    * blocks off-local. MaterializationGuardSpec keeps raw checkpoint
+    * calls out of the rest of `src/main`. */
   private[graft] def materializeFrame(spark: SparkSession,
-      df: DataFrame): DataFrame = materialize(spark, df)
-
-  private def materialize(spark: SparkSession, built: DataFrame): DataFrame =
+      built: DataFrame): DataFrame =
     mode(spark) match {
       case "persist" =>
         val df = built.persist(
@@ -131,7 +132,7 @@ object DfMemo {
       // is exactly what a shared intermediate means. Off-local the
       // recompute-on-loss trade is NOT acceptable, so [[mode]] swaps in
       // recoverable persist / reliable checkpoint materialization.
-      val built = materialize(spark, build)
+      val built = materializeFrame(spark, build)
       tab.synchronized {
         val raced = tab.get(key)
         if (raced != null) raced
@@ -154,13 +155,16 @@ object DfMemo {
     }
   }
 
-  /** Free a checkpointed frame's storage eagerly. ONLY safe when the
+  /** Free a materialized frame's storage eagerly. ONLY safe when the
     * caller knows no live plan references the frame: a localCheckpoint's
     * blocks are its only copy (`df.unpersist()` would be a no-op — no
     * CacheManager entry — while the backing RDD cannot recompute), so
     * releasing a frame someone still holds fails their next execution.
-    * Used by iterative drivers (label propagation) for superseded
-    * per-round snapshots, which by construction nothing references. */
+    * A persisted frame is unpersisted; frames cached on top of it whose
+    * data are already loaded stay cached. Used by
+    * `Dedup.clustersBuild` for the superseded per-round label frame,
+    * which by construction nothing references once the next round is
+    * materialized. */
   private[graft] def release(df: DataFrame): Unit =
     try df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -169,7 +173,7 @@ object DfMemo {
       case _ =>
         df.unpersist()
         ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   /** Forget everything (idempotent; tests + long services). References
     * drop; the ContextCleaner frees checkpoint blocks once consumers

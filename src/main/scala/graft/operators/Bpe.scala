@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.OpModule
 
@@ -22,35 +21,19 @@ import graft.OpModule
   *    (a,a) twice), weighted by word frequency — Sennrich's
   *    `get_stats`;
   *  - applying a merge is GREEDY LEFT-TO-RIGHT within each word
-  *    ("aaa" + merge (a,a) -> [aa, a]); the Spark side gets this from a
-  *    sequential array fold, the oracle from the closed form: a match
+  *    ("aaa" + merge (a,a) -> [aa, a]); the trainer gets this from a
+  *    left-to-right scan, the oracle from the closed form: a match
   *    position is rewritten iff its offset within its maximal run of
   *    CONSECUTIVE match positions is even (for l != r runs have length
   *    1, so every match rewrites — overlap is only possible when
   *    l == r).
   *
-  * Scale shape: the corpus is touched ONCE (tokenize -> word-type
-  * counts, one hash aggregation, the same `doc_toks` frame five other
-  * families share); training then runs on the VOCABULARY-sized frame
-  * (|word types|, millions at 100 TB — not corpus-sized) with
-  * INCREMENTAL pair-count maintenance AND BATCHED rounds: the standing
-  * (l, r, cnt) table is built once, and each round (a) accepts a
-  * compatible batch of up to [[trainOn]]'s `batchK` top pairs whose
-  * one-pass application is provably identical to one-merge-at-a-time
-  * training ([[acceptBatch]] — non-chaining, output-disjoint, count-
-  * dominant), (b) rewrites ONLY the words containing an accepted
-  * pair, and (c) applies the exact count delta (new pairs minus old
-  * pairs of the touched words) back onto the standing table. Per-round
-  * explode+shuffle work is proportional to the TOUCHED subset, not the
-  * vocabulary, and a production ~30k-merge vocabulary costs ~N/k
-  * Spark jobs, not N — the two fixes that beat the quadratic
-  * recount-every-round formulation. The per-round driver traffic is
-  * the ≤ batchK candidate rows (bounded; a per-round sync is loop
-  * control and exists in any formulation — batching amortizes it).
-  * BpeSpec proves incremental ≡ full recount AND batched ≡ sequential
-  * at N=200 on random corpora, and the DuckDB oracle (a 12-level full
-  * recount) cross-checks every shipped query against the incremental
-  * batched engine.
+  * Scale shape: the corpus is touched ONCE ([[wordTypes]]: tokenize ->
+  * word-type counts, one distributed hash aggregation); training then
+  * runs on that VOCABULARY-sized table (|word types|, not corpus-sized)
+  * in the single-node [[trainLocal]] (which says why one node). The
+  * DuckDB oracle (a 12-level full-recount CTE replay) hash-checks every
+  * shipped query against it.
   * Encoding against the learned vocabulary ([[encodeDf]]) is a
   * broadcast join of the final word-type segmentation back onto the
   * token stream — the merges table itself is [[BpeMergesN]] rows.
@@ -66,216 +49,17 @@ object Bpe extends OpModule {
   private[graft] case class Merge(rank: Int, l: String, r: String, cnt: Long)
 
   // per-(session, dir) training result: the merges list plus the final
-  // word-type segmentation (localCheckpointed). Weak in the session for
-  // the same lifecycle reason as DfMemo.
+  // word-type segmentation (a local relation of the trainer's output).
+  // Weak in the session for the same lifecycle reason as DfMemo.
   private val cache = new java.util.WeakHashMap[
     SparkSession, scala.collection.mutable.Map[String, (Seq[Merge], DataFrame)]]()
 
-  /** Greedy left-to-right application of a BATCH of mutually
-    * independent merges to a symbol array, as a sequential fold: append
-    * each symbol unless (last, x) is one of the accepted pairs, in
-    * which case the just-appended left symbol is replaced by the merged
-    * symbol. `accepted` is a literal `array<struct<l,r>>` shipped in
-    * the plan (k rows, broadcast by value). Batch-compatibility
-    * ([[acceptBatch]]) guarantees matches of DISTINCT accepted pairs
-    * never overlap and no accepted pair consumes another's output
-    * symbol, so one fold pass equals applying the accepted merges
-    * sequentially in rank order; within a single pair's own run
-    * ("aaa" + (a,a)) the fold is greedy non-overlapping exactly as
-    * sequential BPE (a replacement cannot immediately re-merge — the
-    * merged symbol is excluded as an accepted left side). */
-  private def mergeFold(syms: Column, accepted: Column): Column =
-    aggregate(syms,
-      array().cast("array<string>"),
-      (acc, x) =>
-        when(size(acc) > 0 && array_contains(accepted,
-            struct(element_at(acc, -1).as("l"), x.as("r"))),
-          concat(slice(acc, lit(1), size(acc) - 1),
-            array(concat(element_at(acc, -1), x))))
-          .otherwise(concat(acc, array(x))))
-
-  /** Adjacent-pair structs of a symbol array (naive counts: every
-    * position, runs included). `syms` is always a materialized array
-    * column here, so element_at is a cheap load (no re-derivation — the
-    * generate-pruning pathology needs an expensive array source). */
-  private def pairsCol(syms: Column): Column =
-    when(size(syms) >= 2,
-      transform(sequence(lit(1), size(syms) - 1),
-        i => struct(element_at(syms, i).as("l"),
-          element_at(syms, i + 1).as("r"))))
-      .otherwise(array().cast("array<struct<l:string,r:string>>"))
-
-  /** One round's candidate pair (standing naive count attached). */
-  private[graft] case class Cand(l: String, r: String, cnt: Long)
-
-  /** Batch acceptance (the SentencePiece-style trick that makes a
-    * production vocabulary N/k jobs instead of N): from the standing
-    * pair table's top-`fetched` candidates, sorted by (cnt DESC, l, r),
-    * accept the longest PREFIX of pairwise-compatible pairs whose
-    * sequential application is PROVABLY identical to one-at-a-time
-    * training. Two accepted pairs p, q must not
-    *
-    *  - chain (`p.r == q.l` or `q.r == p.l`): applying one would
-    *    destroy occurrences of the other, changing its count;
-    *  - consume each other's output (`q.l` or `q.r` string-equal to
-    *    `p.l + p.r`, either direction): the earlier merge would CREATE
-    *    occurrences of the later pair.
-    *
-    * The scan STOPS at the first conflicting candidate (never skips —
-    * a skipped chained pair might still be sequential's next argmax
-    * after its count drops), and the accepted prefix is then truncated
-    * to counts STRICTLY ABOVE the stop bound: every pair chaining with
-    * an accepted one ranks at/after the stop (else it would have been
-    * accepted — contradiction with pairwise compatibility), so every
-    * pair a batch merge can create — (x, m) bounded by standing
-    * cnt(x, p.l), (m, y) by cnt(p.r, y), (m, m') by cnt(p.r, q.l),
-    * all chaining pairs — counts at most the stop bound and can never
-    * outrank an accepted pair at its sequential turn. Unaccepted
-    * independent pairs rank at/after the last accepted (sorted prefix)
-    * and old counts never increase, so each accepted pair IS the
-    * argmax sequential training would pick at its rank. When all
-    * `fetched` candidates are compatible but the table may hold more
-    * rows (`mayHaveMore`), the last fetched count becomes the stop
-    * bound (unseen pairs rank at/under it). The head candidate is the
-    * exact standing argmax and is always safe, so acceptance never
-    * returns empty on non-empty input. */
-  private[graft] def acceptBatch(cands: Seq[Cand],
-      mayHaveMore: Boolean): Seq[Cand] = {
-    val acc = scala.collection.mutable.ArrayBuffer[Cand]()
-    var stop: Option[Long] = None
-    val it = cands.iterator
-    while (it.hasNext && stop.isEmpty) {
-      val c = it.next()
-      val conflict = acc.exists { p =>
-        p.r == c.l || c.r == p.l ||
-          c.l == p.l + p.r || c.r == p.l + p.r ||
-          p.l == c.l + c.r || p.r == c.l + c.r
-      }
-      if (conflict) stop = Some(c.cnt) else acc += c
-    }
-    if (stop.isEmpty && mayHaveMore && cands.nonEmpty)
-      stop = Some(cands.last.cnt)
-    val kept = stop match {
-      case Some(s) => acc.takeWhile(_.cnt > s).toSeq
-      case None => acc.toSeq
-    }
-    if (kept.isEmpty) cands.take(1) else kept
-  }
-
-  /** The training loop over an explicit word-type frame `(tok, freq,
-    * syms)` — both engines of the property proofs:
-    *
-    *  - `incremental = true` (the shipped path): maintain the standing
-    *    (l, r, cnt) pair-count table across rounds; each round accepts
-    *    a compatible BATCH of top pairs ([[acceptBatch]]), rewrites
-    *    only the words CONTAINING an accepted pair, and folds the exact
-    *    touched-word count delta back in. Per-round shuffle work ∝
-    *    touched words; rounds ≈ n / batch size.
-    *  - `incremental = false`: the reference full recount (every round
-    *    re-aggregates all pairs from scratch) — quadratic, kept as the
-    *    in-engine reference the property spec compares against.
-    *  - `batchK = 1` degenerates to strictly one-merge-per-round
-    *    training — the reference engine for the batched ≡ sequential
-    *    property (BpeSpec).
-    *
-    * Per round the driver collects the ≤ batchK candidate rows (a
-    * BOUNDED collect — the acceptance scan is inherently sequential
-    * over a handful of rows, and a per-round driver sync already exists
-    * as loop control; batching amortizes it k-fold, which is the real
-    * scale lever — the round-8 in-plan argmax kept one pinned 1-row
-    * checkpoint per round plus an n-way union, strictly worse at
-    * production merge counts) and ships the accepted pairs back as a
-    * LITERAL struct array in the rewrite plan. `strict = true` throws
-    * on pair exhaustion before `n` merges (the shipped queries'
-    * contract); `strict = false` stops early. Frames are
-    * re-checkpointed per round so lineage never stacks. */
-  private[graft] def trainOn(spark: SparkSession, words0: DataFrame, n: Int,
-      incremental: Boolean, strict: Boolean = true,
-      batchK: Int = 64): (Seq[Merge], DataFrame) = {
-    import spark.implicits._
-    var words = words0.localCheckpoint()
-    var pc: DataFrame =
-      if (incremental)
-        words.select($"freq", explode(pairsCol($"syms")).as("p"))
-          .groupBy($"p.l", $"p.r").agg(sum($"freq").as("cnt"))
-          .localCheckpoint()
-      else null
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var exhausted = false
-    while (rank <= n && !exhausted) {
-      val fetch = math.min(batchK, n - rank + 1)
-      val cands =
-        (if (incremental) pc.filter($"cnt" > 0)
-         else words
-           .select($"freq", explode(pairsCol($"syms")).as("p"))
-           .groupBy($"p.l", $"p.r").agg(sum($"freq").as("cnt")))
-          .orderBy($"cnt".desc, $"l", $"r")
-          .limit(fetch)
-          .collect()
-          .map(r => Cand(r.getAs[String]("l"), r.getAs[String]("r"),
-            r.getAs[Long]("cnt")))
-          .toSeq
-      if (cands.isEmpty) {
-        if (strict) throw new IllegalStateException(
-          s"BPE: no pair left at round $rank — corpus fully merged")
-        exhausted = true
-      } else {
-        val accepted = acceptBatch(cands, mayHaveMore = cands.size == fetch)
-        merges ++= accepted.zipWithIndex.map { case (c, i) =>
-          Merge(rank + i, c.l, c.r, c.cnt) }
-        val accLit = array(accepted.map(c =>
-          struct(lit(c.l).as("l"), lit(c.r).as("r"))): _*)
-        if (incremental) {
-          // only words containing an accepted pair change this round
-          val hasPair = arrays_overlap(pairsCol($"syms"), accLit)
-          val touched = words.filter(hasPair)
-          val merged = touched
-            .withColumn("syms", mergeFold($"syms", accLit))
-          // exact delta: new pairs of the rewritten words minus their
-          // old pairs, frequency-weighted — by construction the
-          // standing table stays equal to a full recount
-          val delta = merged
-            .select($"freq".as("d"), explode(pairsCol($"syms")).as("p"))
-            .unionByName(touched
-              .select((-$"freq").as("d"), explode(pairsCol($"syms")).as("p")))
-            .groupBy($"p.l", $"p.r").agg(sum($"d").as("d"))
-          val pcNext = pc.join(delta, Seq("l", "r"), "full_outer")
-            .select($"l", $"r",
-              (coalesce($"cnt", lit(0L)) + coalesce($"d", lit(0L))).as("cnt"))
-            .filter($"cnt" > 0)
-            .localCheckpoint()
-          // union concatenates partition lists — without the coalesce
-          // the frame doubles its partition count every round (2^N task
-          // overhead by round N); fold back to the standing layout
-          val next = words.filter(!hasPair)
-            .unionByName(merged)
-            .coalesce(math.max(words.rdd.getNumPartitions, 1))
-            .localCheckpoint()
-          graft.functions.DfMemo.release(pc)
-          graft.functions.DfMemo.release(words)
-          pc = pcNext
-          words = next
-        } else {
-          // mergeFold is the identity on words lacking an accepted pair
-          val next = words
-            .withColumn("syms", mergeFold($"syms", accLit))
-            .localCheckpoint()
-          graft.functions.DfMemo.release(words)
-          words = next
-        }
-        rank += accepted.size
-      }
-    }
-    if (pc != null) graft.functions.DfMemo.release(pc)
-    (merges.result(), words)
-  }
-
-  /** Code-point string compare — the order Spark's `orderBy(l, r)` uses
-    * (UTF8String binary order == code-point order), NOT Java's
-    * `String.compareTo` (UTF-16 code-unit order, which disagrees for
-    * supplementary characters vs [U+E000, U+FFFF]). Keeps [[trainLocal]]
-    * tie-breaking bit-compatible with [[trainOn]] on any input. */
+  /** Code-point string compare — UTF-8 binary order, which is what
+    * Spark's `UTF8String` and the DuckDB oracle's `ORDER BY cnt DESC, l,
+    * r` sort by — NOT Java's `String.compareTo` (UTF-16 code-unit order,
+    * which disagrees for supplementary characters vs [U+E000, U+FFFF]).
+    * Keeps [[trainLocal]]'s tie-break equal to the oracle's on any
+    * input. */
   private def cpCmp(a: String, b: String): Int = {
     var i = 0; var j = 0
     while (i < a.length && j < b.length) {
@@ -287,33 +71,25 @@ object Bpe extends OpModule {
   }
 
   /** Single-node BPE trainer over a collected word-type table — the
-    * production-vocabulary completion path. EXACTLY [[trainOn]]'s
-    * sequential semantics (naive adjacent counts runs-included, argmax
-    * tie-broken (cnt DESC, l, r) in UTF8 binary order, greedy
-    * left-to-right non-overlapping rewrite), asserted merge-for-merge
-    * and segment-for-segment against the Spark loop in BpeSpec; the
-    * shipped `text_bpe_*` queries run THIS trainer, so the DuckDB
-    * oracle's 12-level sequential CTE replay hash-checks it per round.
+    * one trainer the shipped `text_bpe_*` queries run: naive adjacent
+    * counts runs-included, argmax tie-broken (cnt DESC, l, r) in UTF-8
+    * binary order ([[cpCmp]]), greedy left-to-right non-overlapping
+    * rewrite. The DuckDB oracle's 12-level sequential CTE replay
+    * hash-checks it per round, and BpeSpec asserts it merge-for-merge
+    * and segment-for-segment against a plain-Scala full recount.
     *
-    * Why a local loop is the SCALE answer, not a concession: training
-    * state is VOCABULARY-sized (word types × short symbol arrays — the
-    * corpus was already reduced by [[wordTypes]]'s one distributed
-    * pass), and each merge depends on every prior one, so the loop is
-    * inherently sequential; distributing it buys per-round shuffle +
-    * driver-sync overhead on a frame that fits in memory. Round 13
-    * measured the cost of ignoring that: the batched Spark loop's
-    * N=30k run blew past 5.4 h (~760 driver rounds) because per-round
-    * acceptance thins (and widening acceptance past the first conflict
-    * is UNSOUND — a skipped chained pair's decremented count is
-    * unobservable driver-side and may still dominate later accepted
-    * pairs at sequential's next turn, see PLANS.md §"Round-14 BPE").
-    * This trainer instead maintains the pair counts incrementally with
-    * a pair -> word-ids inverted index and a lazy-invalidation max-heap
-    * (the SentencePiece / HF-tokenizers architecture): per merge, work
-    * ∝ words actually containing the pair, argmax is O(log |pairs|),
-    * and a 30k-merge vocabulary over 200k word types completes in
-    * minutes on one core. The Spark loop remains the fallback for
-    * vocabularies beyond one node's memory.
+    * Why one node is the SCALE answer: training state is
+    * VOCABULARY-sized (word types × short symbol arrays — the corpus
+    * was already reduced by [[wordTypes]]'s one distributed pass), and
+    * each merge depends on every prior one, so distributing the loop
+    * buys per-round shuffle + driver-sync overhead on a frame that fits
+    * in memory. A distributed batched-round loop needed ≥5.7 h without
+    * finishing N=30k merges (PLANS.md §"Round-14 BPE"). This trainer
+    * maintains the pair counts incrementally with a pair -> word-ids
+    * inverted index and a lazy-invalidation max-heap (the SentencePiece
+    * / HF-tokenizers architecture): per merge, work ∝ words actually
+    * containing the pair, argmax is O(log |pairs|), and 30k merges over
+    * 200k word types take ~19 s on one core.
     */
   private[graft] def trainLocal(types: Seq[(String, Long)], n: Int,
       strict: Boolean = true): (Seq[Merge], Map[String, Seq[String]]) = {
@@ -323,7 +99,7 @@ object Bpe extends OpModule {
     // segment by CODE POINTS, matching wordTypes' UTF8String substr
     // semantics — per-UTF-16-char (t.map(_.toString)) would split a
     // supplementary character (emoji, CJK ext-B) into lone surrogates,
-    // diverging from the Spark loop and corrupting to U+FFFD on toDF
+    // diverging from the oracle and corrupting to U+FFFD on toDF
     val syms: Array[mutable.ArrayBuffer[String]] =
       toks.map { t =>
         val buf = mutable.ArrayBuffer.empty[String]
@@ -435,12 +211,11 @@ object Bpe extends OpModule {
       toks.iterator.zip(syms.iterator.map(_.toSeq)).toMap)
   }
 
-  /** [[trainLocal]] over a `(tok, freq, syms)` frame, returning the same
-    * shape as [[trainOn]]. The collect is VOCABULARY-sized by design
-    * (the corpus-sized reduction already happened in [[wordTypes]]'s
-    * one distributed pass) — the same bound the per-round loop's
-    * candidate collect already documents, and the reason production
-    * tokenizer trainers are single-node. */
+  /** [[trainLocal]] over a `(tok, freq, syms)` frame, returning the
+    * merges and the final segmentation as a `(tok, freq, syms)` frame.
+    * The collect is VOCABULARY-sized by design (the corpus-sized
+    * reduction already happened in [[wordTypes]]'s one distributed
+    * pass), the reason production tokenizer trainers are single-node. */
   private[graft] def trainOnLocal(spark: SparkSession, words0: DataFrame,
       n: Int, strict: Boolean = true): (Seq[Merge], DataFrame) = {
     import spark.implicits._
@@ -466,11 +241,8 @@ object Bpe extends OpModule {
   }
 
   /** Run (and cache) the shipped training once per (session, dir):
-    * returns the ranked merges and the final word-type segmentation.
-    * Engine is [[trainOnLocal]] (round 14) — spec-proven ≡ the Spark
-    * loop and hash-checked per-round by the sequential DuckDB oracle;
-    * the distributed [[trainOn]] loop remains for vocabularies beyond
-    * one node. */
+    * returns the ranked merges and the final word-type segmentation,
+    * from [[trainOnLocal]]. */
   private def train(spark: SparkSession, dir: String): (Seq[Merge], DataFrame) = {
     val tab = cache.synchronized {
       var m = cache.get(spark)

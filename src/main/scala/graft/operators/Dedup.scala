@@ -666,13 +666,13 @@ object Dedup extends OpModule {
     val truth = lshTruthDf(spark, dir)
     val truthN = truth.agg(count(lit(1)).as("n_true_total"))
     LshCurveConfigs.map { case (b, r) =>
-      // ranked ONCE per config and checkpointed (docs × b rows,
+      // ranked ONCE per config and materialized (docs × b rows,
       // bounded): head/star/occupancy all read these rows instead of
       // re-running the banding + rank window per reference
-      val bands = bandFrame(spark, sig, b, r)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"band", $"band_key").orderBy($"doc_id")))
-        .localCheckpoint()
+      val bands = graft.functions.DfMemo.materializeFrame(spark,
+        bandFrame(spark, sig, b, r)
+          .withColumn("rn", row_number().over(
+            Window.partitionBy($"band", $"band_key").orderBy($"doc_id"))))
       // ONE pass over the guarded pair stream serves both counts: the
       // truth set (real near-dup pairs, metadata-sized) broadcasts
       // into a left join carrying an indicator, so the candidate count
@@ -971,11 +971,11 @@ object Dedup extends OpModule {
     val base = SimhashSatCodeOffsets.zipWithIndex.map { case (o, i) =>
       shiftright($"g", i).bitwiseAND(lit(1L)) * lit(15L << o)
     }.reduce(_ + _)
-    val sig = ranked
+    // tiny; consumed by 3 frames below
+    val sig = graft.functions.DfMemo.materializeFrame(spark, ranked
       .withColumn("g", expr("cast((rk - 1) div 2 as bigint)"))
       .withColumn("p", expr("cast((rk - 1) % 2 as bigint)"))
-      .select($"doc_id", (base + $"p" * lit(SimhashSatFlipMask)).as("simhash"))
-      .localCheckpoint() // tiny; consumed by 3 frames below
+      .select($"doc_id", (base + $"p" * lit(SimhashSatFlipMask)).as("simhash")))
     val guarded = simhashGuardedPairs(sig, s"simhash_sat_bands:$dir")
     val exact = sig.as("x")
       .join(sig.as("y"), col("x.doc_id") < col("y.doc_id"))
@@ -1058,8 +1058,11 @@ object Dedup extends OpModule {
     * The driver orchestrates rounds; convergence is detected by a
     * change-count accumulator folded into each round's own
     * materializing job (one Spark action per round, no compare-join).
-    * The data never leaves the cluster, and each round's lineage is
-    * checkpoint-truncated so iteration N doesn't replan N-deep trees.
+    * The data never leaves the cluster. Each round is materialized
+    * through DfMemo's mode: local mode cuts its lineage, so iteration N
+    * doesn't replan N-deep trees; persist mode keeps the lineage so a
+    * lost block recomputes, and each round reads the previous one from
+    * cache.
     * Duplicate components in web corpora are shallow (near-clique), so
     * the round count stays small at any corpus size.
     *
@@ -1075,12 +1078,12 @@ object Dedup extends OpModule {
   private def clustersBuild(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val pairs = minhashPairsDf(spark, dir)
-    val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .localCheckpoint()
-    var labels = edges.select($"src".as("doc_id")).distinct()
-      .withColumn("canon", $"doc_id")
-      .localCheckpoint()
+    val edges = graft.functions.DfMemo.materializeFrame(spark,
+      pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
+        .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))))
+    var labels = graft.functions.DfMemo.materializeFrame(spark,
+      edges.select($"src".as("doc_id")).distinct()
+        .withColumn("canon", $"doc_id"))
     var converged = false
     var rounds = 0
     while (!converged && rounds < 64) {
@@ -1091,12 +1094,12 @@ object Dedup extends OpModule {
         .agg(min($"nbr_canon").as("nbr_min"))
       // convergence detection rides INSIDE the round's one materializing
       // job: the label fold counts its own changes into an accumulator
-      // while the eager localCheckpoint computes the new frame — no
+      // while the eager materialization computes the new frame — no
       // separate compare-join action per round (round 4 ran one, doubling
       // the job count). Task retries can only inflate a NONZERO count
       // (a task that saw no change re-adds zero), so `== 0` stays exact.
       val changes = spark.sparkContext.longAccumulator(s"labelChanges$rounds")
-      val next = labels
+      val next = graft.functions.DfMemo.materializeFrame(spark, labels
         .join(nbrMin, Seq("doc_id"), "left")
         .select($"doc_id", $"canon", $"nbr_min")
         .as[(Long, Long, Option[Long])]
@@ -1105,10 +1108,9 @@ object Dedup extends OpModule {
           if (c != canon) changes.add(1L)
           (id, c)
         })
-        .toDF("doc_id", "canon")
-        .localCheckpoint()
+        .toDF("doc_id", "canon"))
       converged = changes.value == 0L
-      // the superseded round's checkpoint is referenced by nothing once
+      // the superseded round's frame is referenced by nothing once
       // `next` is materialized — release it eagerly instead of pinning
       // O(rounds) label snapshots until the ContextCleaner's GC cycle
       graft.functions.DfMemo.release(labels)

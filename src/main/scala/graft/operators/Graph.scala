@@ -26,7 +26,7 @@ import graft.OpModule
   * Scale shape: the edge table is built from per-order part arrays (never
   * a row-grain self-join — orders bound the pair fan-out), pre-partitioned
   * on `src` ONCE and reused across all [[PrIters]] iterations via
-  * localCheckpoint, so each iteration shuffles only the node-sized rank
+  * one DfMemo materialization, so each iteration shuffles only the node-sized rank
   * table into the standing edge partitioning, then aggregates on `dst`.
   * At 100 TB the ranks:edges join is the canonical distributed PageRank
   * step — no driver-side state, no adjacency materialized per node.
@@ -68,7 +68,7 @@ object Graph extends OpModule {
     }
 
   /** The shared rank frame (node, r_prev, r_last): iterations 1..7 as
-    * one unrolled plan, the 7th checkpointed, the 8th built on top —
+    * one unrolled plan, the 7th materialized, the 8th built on top —
     * memoized so `graph_pagerank` (reads r_last) and
     * `graph_pagerank_converge` (compares the two) price ONE run. */
   private[graft] def ranksDf(spark: SparkSession, dir: String): DataFrame =
@@ -79,7 +79,7 @@ object Graph extends OpModule {
     * as ONE declarative plan, plus the step function to extend it.
     * Standing state for the loop: the out-weight joins INTO the edge
     * table once (never re-joined per iteration), partitioned on src and
-    * lineage-cut, so each iteration is exactly one node-sized shuffle
+    * materialized, so each iteration is exactly one node-sized shuffle
     * of ranks into the standing edge partitioning plus the dst
     * aggregate. PrIters is a small fixed constant, so the loop UNROLLS
     * — one job, no per-iteration driver sync (a dynamic-N loop would
@@ -94,9 +94,8 @@ object Graph extends OpModule {
     import spark.implicits._
     val edges0 = edgesDf(spark, dir)
     val deg = edges0.groupBy($"src").agg(sum($"w").as("dw"))
-    val edges = edges0.join(deg, Seq("src"))
-      .repartition($"src")
-      .localCheckpoint()
+    val edges = graft.functions.DfMemo.materializeFrame(spark,
+      edges0.join(deg, Seq("src")).repartition($"src"))
     def step(ranks: DataFrame): DataFrame = edges
       .join(broadcast(ranks), $"src" === $"node")
       .groupBy($"dst")
@@ -109,14 +108,14 @@ object Graph extends OpModule {
   }
 
   /** The pre-memo rank builder (plan-shape assertions target
-    * [[unrolledRanks]] — the memoized frame is a LogicalRDD with the
-    * lineage cut). */
+    * [[unrolledRanks]] — in local mode the memoized frame is a
+    * LogicalRDD with the lineage cut). */
   private[graft] def ranksBuild(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (r7, step) = unrolledRanks(spark, dir, PrIters - 1)
-    // checkpoint the penultimate vector so the final step's plan does
+    // materialize the penultimate vector so the final step's plan does
     // not re-derive the 7-level subtree a second time for the audit
-    val prev = r7.localCheckpoint()
+    val prev = graft.functions.DfMemo.materializeFrame(spark, r7)
     step(prev)
       .join(prev.select($"node", $"r".as("r_prev")), Seq("node"))
       .select($"node", $"r_prev", $"r".as("r_last"))
@@ -447,16 +446,17 @@ object Graph extends OpModule {
   private[graft] def ccLabelsOn(edges: DataFrame): DataFrame = {
     val nodes = edges.select(col("src").as("node"))
       .unionByName(edges.select(col("dst").as("node"))).distinct()
-    val edgesPlus = edges
+    val spark = edges.sparkSession
+    val edgesPlus = graft.functions.DfMemo.materializeFrame(spark, edges
       .unionByName(nodes.select(col("node").as("src"), col("node").as("dst")))
-      .repartition(col("src")).localCheckpoint()
+      .repartition(col("src")))
     def step(l: DataFrame): DataFrame =
       edgesPlus.join(broadcast(l), col("src") === col("node"))
         .groupBy(col("dst")).agg(min(col("lbl")).as("lbl"))
         .select(col("dst").as("node"), col("lbl"))
     var l: DataFrame = nodes.select(col("node"), col("node").as("lbl"))
     for (_ <- 1 until CcIters) l = step(l)
-    val prev = l.localCheckpoint()
+    val prev = graft.functions.DfMemo.materializeFrame(spark, l)
     step(prev)
       .join(prev.select(col("node"), col("lbl").as("lbl_prev")), Seq("node"))
       .select(col("node"), col("lbl_prev"), col("lbl").as("lbl_last"))

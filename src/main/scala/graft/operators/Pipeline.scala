@@ -239,12 +239,11 @@ object Pipeline extends OpModule {
     }
     ContamCurveNs.map { n =>
       val parts = $"tok" +: (1 until n).map(k => col(s"t$k"))
-      val sets = leads
+      val sets = graft.functions.DfMemo.materializeFrame(spark, leads
         .filter(col(s"t${n - 1}").isNotNull)
         .select($"doc_id",
           ColFns.hex32(concat_ws(" ", parts: _*)).as("h"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val bench = sets.filter($"doc_id" % BenchMod === 0)
         .select($"h").distinct()
       sets.filter($"doc_id" % BenchMod =!= 0)

@@ -257,7 +257,7 @@ object Regress extends OpModule {
     * discount), trained ON the cluster by `LogregIters` unrolled Newton
     * steps — per step ONE map-side-combined aggregation of 10 floored
     * integer sufficient statistics, the 3x3 Cramer solve in the
-    * projection, and the 1-row weights frame localCheckpointed so step
+    * projection, and the 1-row weights frame memoized so step
     * k+1's scan is the only rescan (the pagerank unroll lesson inverted:
     * here each level costs a full fact scan, so caching the O(1) state
     * beats one giant plan). Output is the per-iteration audit — weights,

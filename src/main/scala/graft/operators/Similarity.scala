@@ -1706,12 +1706,12 @@ object Similarity extends OpModule {
       .withColumn("brk", row_number().over(
         Window.partitionBy($"qid", $"prk").orderBy($"ip".desc, $"nid")))
       .filter($"brk" <= PqShortlist)
-    val short0 = pruned
+    // panel × budgets × shortlist rows, bounded
+    val short0 = graft.functions.DfMemo.materializeFrame(spark, pruned
       .join(budgets, $"prk" <= $"probes")
       .withColumn("srk", row_number().over(
         Window.partitionBy($"qid", $"probes").orderBy($"ip".desc, $"nid")))
-      .filter($"srk" <= PqShortlist)
-      .localCheckpoint() // panel × budgets × shortlist rows, bounded
+      .filter($"srk" <= PqShortlist))
     def hitCurve(short: DataFrame, rung: String): DataFrame =
       truth.crossJoin(budgets)
         .join(short.select($"qid", $"nid", $"probes", lit(1L).as("hit")),

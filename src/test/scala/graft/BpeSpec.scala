@@ -3,8 +3,10 @@ package graft
 import graft.operators.Bpe
 
 /** BPE vocabulary induction: hand-computed merge sequences (including
-  * the greedy-overlap run case the corpus never exercises), loud
-  * exhaustion, and structural properties on the real corpus. */
+  * the greedy-overlap run case the corpus never exercises), merge-for-
+  * merge agreement with an independent full-recount reference far past
+  * the oracle's 12 rounds, loud exhaustion, and structural properties
+  * on the real corpus. */
 class BpeSpec extends SparkSpec {
 
   test("BPE merges match the hand computation, incl. greedy a-a runs") {
@@ -51,12 +53,21 @@ class BpeSpec extends SparkSpec {
       "o" -> (1L, 1L), "p" -> (1L, 1L)))
   }
 
-  /** Independent plain-Scala BPE (naive counts, greedy rewrite,
-    * lexicographic ties) — no Spark, no SQL; the third implementation
-    * the engine and the oracle must both agree with. */
+  /** UTF-8 binary (code-point) string order — the tie-break order of
+    * Spark's `UTF8String` and of the DuckDB oracle; Scala's default
+    * `String` ordering is UTF-16 code-unit order. */
+  private val codePointOrd: Ordering[String] =
+    Ordering.by((s: String) => s.codePoints.toArray.toSeq)(
+      Ordering.Implicits.seqOrdering[Seq, Int])
+
+  /** Independent plain-Scala BPE (full recount every round, naive
+    * counts, greedy rewrite, code-point segmentation and ties) — no
+    * Spark, no SQL, no incremental state; the third implementation the
+    * trainer and the oracle must both agree with. */
   private def refBpe(words: Map[String, Long], n: Int)
       : (Seq[(String, String, Long)], Map[String, Vector[String]]) = {
-    var segs = words.keys.map(w => w -> w.map(_.toString).toVector).toMap
+    var segs = words.keys.map(w => w -> w.codePoints.toArray.toVector
+      .map(cp => new String(Character.toChars(cp)))).toMap
     val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
     var exhausted = false
     while (out.size < n && !exhausted) {
@@ -67,7 +78,8 @@ class BpeSpec extends SparkSpec {
       if (counts.isEmpty) exhausted = true
       else {
         val ((l, r), c) = counts.toSeq
-          .minBy { case ((a, b), cnt) => (-cnt, a, b) }
+          .minBy { case ((a, b), cnt) => (-cnt, a, b) }(
+            Ordering.Tuple3(Ordering.Long, codePointOrd, codePointOrd))
         out += ((l, r, c))
         segs = segs.map { case (w, syms) =>
           val b = Vector.newBuilder[String]
@@ -97,8 +109,7 @@ class BpeSpec extends SparkSpec {
         val ws = (0 until 3 + rnd.nextInt(10)).map(_ => pool(rnd.nextInt(pool.size)))
         (i.toLong, ws.mkString(" "), "en")
       }
-      val freq = docs.flatMap(_._2.split(" ")).groupBy(identity)
-        .view.mapValues(_.size.toLong).toMap
+      val freq = freqOf(docs)
       val (refMerges, refSegs) = refBpe(freq, Bpe.BpeMergesN)
       if (refMerges.size == Bpe.BpeMergesN) { // else the engine throws by design
         ran += 1
@@ -123,18 +134,20 @@ class BpeSpec extends SparkSpec {
     assert(ran >= 2, s"only $ran random corpora sustained all merges")
   }
 
-  // heavy: the full-recount engine re-aggregates every pair every
-  // round — ~2 min of its own. The in-loop local-vs-Spark rung below
-  // covers the incremental path's deep behavior each run; this rung
-  // re-proves incremental ≡ quadratic-recount and runs with
-  // SPARK_GRAFT_HEAVY=1 (required whenever Bpe.scala changes).
-  heavyTest("incremental pair-count training equals a full recount at N=200") {
-    import org.apache.spark.sql.DataFrame
-    val seed = 7001
-    val rnd = new scala.util.Random(seed)
-    // a pool wide/long enough that ≥200 merge rounds exist before the
-    // corpus fully merges (each round shrinks the summed word-type
-    // symbol count by at least one)
+  /** Word-type frequencies of a docs fixture, computed independently of
+    * `Bpe.wordTypes`. */
+  private def freqOf(docs: Seq[(Long, String, String)]): Map[String, Long] =
+    docs.flatMap(_._2.split("\\s+").filter(_.nonEmpty)).groupBy(identity)
+      .view.mapValues(_.size.toLong).toMap
+
+  private def segsOf(df: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    df.select($"tok", $"syms").as[(String, Seq[String])].collect().toMap
+  }
+
+  test("local trainer equals the independent reference at N=200 " +
+      "(merges + segmentation)") {
+    val rnd = new scala.util.Random(9101)
     val pool = (0 until 90).map(_ =>
       (1 to 3 + rnd.nextInt(10)).map(_ => "abcdef"(rnd.nextInt(6))).mkString)
       .distinct
@@ -144,97 +157,20 @@ class BpeSpec extends SparkSpec {
           .mkString(" "), "en")
     }
     val dir = writeDocsFixture(docs)
-    // the shipped incremental engine vs the in-engine full recount,
-    // far past the oracle horizon (200 rounds vs BpeMergesN = 12):
-    // identical merge sequences, counts, and final segmentations
-    val (mi, wi) = Bpe.trainOn(spark, Bpe.wordTypes(spark, dir), 200,
-      incremental = true, strict = false)
-    val (mr, wr) = Bpe.trainOn(spark, Bpe.wordTypes(spark, dir), 200,
-      incremental = false, strict = false)
-    assert(mi == mr, s"seed $seed: merge sequences diverged")
-    assert(mi.size >= 200, s"seed $seed: want a deep chain, got ${mi.size}")
-    def segs(df: DataFrame) = {
-      import spark.implicits._
-      df.select($"tok", $"syms").as[(String, Seq[String])].collect().toMap
-    }
-    assert(segs(wi) == segs(wr), s"seed $seed: segmentations diverged")
+    // the shipped trainer (heap + inverted index on the driver) vs the
+    // full-recount reference, far past the oracle horizon: identical
+    // merge sequences, counts, and segmentations
+    val (ml, wl) = Bpe.trainOnLocal(spark, Bpe.wordTypes(spark, dir), 200,
+      strict = false)
+    val (mr, sr) = refBpe(freqOf(docs), 200)
+    assert(ml.map(m => (m.l, m.r, m.cnt)) == mr, "merge sequence diverged")
+    assert(ml.map(_.rank) == (1 to ml.size))
+    assert(ml.size >= 200, s"want a deep chain, got ${ml.size}")
+    assert(segsOf(wl) == sr, "segmentations diverged")
   }
 
-  // heavy: batchK=1 degenerates to one Spark round per merge — 200
-  // rounds × 2 seeds. The batched ≡ sequential property itself is
-  // unchanged since round 10; run with SPARK_GRAFT_HEAVY=1 whenever
-  // acceptBatch or the rewrite fold changes.
-  heavyTest("batched training equals strictly-sequential training at N=200") {
-    import org.apache.spark.sql.DataFrame
-    def segs(df: DataFrame) = {
-      import spark.implicits._
-      df.select($"tok", $"syms").as[(String, Seq[String])].collect().toMap
-    }
-    (1 to 2).foreach { seed =>
-      val rnd = new scala.util.Random(8000 + seed)
-      val pool = (0 until 90).map(_ =>
-        (1 to 3 + rnd.nextInt(10)).map(_ => "abcdef"(rnd.nextInt(6))).mkString)
-        .distinct
-      val docs = (0 until 60).map { i =>
-        (i.toLong,
-          (0 until 4 + rnd.nextInt(10)).map(_ => pool(rnd.nextInt(pool.size)))
-            .mkString(" "), "en")
-      }
-      val dir = writeDocsFixture(docs)
-      // batchK=64 (the shipped default) vs batchK=1 (one merge per
-      // round — the definitionally-sequential reference): identical
-      // merge sequences, counts, and final segmentations, proving the
-      // acceptBatch compatibility rules preserve exact BPE semantics
-      // while cutting the job count ~k-fold
-      val (mb, wb) = Bpe.trainOn(spark, Bpe.wordTypes(spark, dir), 200,
-        incremental = true, strict = false)
-      val (ms, ws) = Bpe.trainOn(spark, Bpe.wordTypes(spark, dir), 200,
-        incremental = true, strict = false, batchK = 1)
-      assert(mb == ms, s"seed $seed: batched merge sequence diverged")
-      assert(mb.size >= 200, s"seed $seed: want a deep chain, got ${mb.size}")
-      assert(segs(wb) == segs(ws), s"seed $seed: segmentations diverged")
-    }
-  }
-
-  test("local trainer equals the Spark loop at N=200 (merges + segmentation)") {
-    import org.apache.spark.sql.DataFrame
-    def segs(df: DataFrame) = {
-      import spark.implicits._
-      df.select($"tok", $"syms").as[(String, Seq[String])].collect().toMap
-    }
-    // one seed in the default loop (the second is negligible marginal
-    // coverage for another ~2 min of batched-loop wall; the heavy set
-    // runs the sibling properties at two seeds)
-    (1 to 1).foreach { seed =>
-      val rnd = new scala.util.Random(9100 + seed)
-      val pool = (0 until 90).map(_ =>
-        (1 to 3 + rnd.nextInt(10)).map(_ => "abcdef"(rnd.nextInt(6))).mkString)
-        .distinct
-      val docs = (0 until 60).map { i =>
-        (i.toLong,
-          (0 until 4 + rnd.nextInt(10)).map(_ => pool(rnd.nextInt(pool.size)))
-            .mkString(" "), "en")
-      }
-      val dir = writeDocsFixture(docs)
-      // the round-14 production trainer (heap + inverted index on the
-      // driver) vs the distributed batched loop, far past the oracle
-      // horizon: identical merge sequences, counts, and segmentations
-      val (ml, wl) = Bpe.trainOnLocal(spark, Bpe.wordTypes(spark, dir), 200,
-        strict = false)
-      val (ms, ws) = Bpe.trainOn(spark, Bpe.wordTypes(spark, dir), 200,
-        incremental = true, strict = false)
-      assert(ml == ms, s"seed $seed: local merge sequence diverged")
-      assert(ml.size >= 200, s"seed $seed: want a deep chain, got ${ml.size}")
-      assert(segs(wl) == segs(ws), s"seed $seed: segmentations diverged")
-    }
-  }
-
-  test("local trainer segments supplementary characters like the Spark loop") {
-    import org.apache.spark.sql.DataFrame
-    def segs(df: DataFrame) = {
-      import spark.implicits._
-      df.select($"tok", $"syms").as[(String, Seq[String])].collect().toMap
-    }
+  test("local trainer segments supplementary characters like the " +
+      "independent reference") {
     // 𝕏 (U+1D54F) and 😀 (U+1F600) are supplementary: one code point,
     // TWO UTF-16 chars. A per-char segmentation would split them into
     // lone surrogates and diverge from wordTypes' code-point substr.
@@ -244,14 +180,13 @@ class BpeSpec extends SparkSpec {
     val dir = writeDocsFixture(docs)
     val (ml, wl) = Bpe.trainOnLocal(spark, Bpe.wordTypes(spark, dir), 6,
       strict = false)
-    val (ms, ws) = Bpe.trainOn(spark, Bpe.wordTypes(spark, dir), 6,
-      incremental = true, strict = false)
-    assert(ml == ms, "merge sequences diverged on supplementary input")
-    assert(segs(wl) == segs(ws),
-      "segmentations diverged on supplementary input")
+    val (mr, sr) = refBpe(freqOf(docs), 6)
+    assert(ml.map(m => (m.l, m.r, m.cnt)) == mr,
+      "merge sequences diverged on supplementary input")
+    assert(segsOf(wl) == sr, "segmentations diverged on supplementary input")
     // no lone surrogates anywhere: every sym must survive a UTF-8
     // round-trip unchanged (a lone surrogate decays to U+FFFD)
-    segs(wl).values.flatten.foreach { s =>
+    segsOf(wl).values.flatten.foreach { s =>
       val rt = new String(s.getBytes("UTF-8"), "UTF-8")
       assert(rt == s, s"sym '$s' is not well-formed UTF-16")
     }

@@ -75,6 +75,31 @@ class DfMemoSpec extends SparkSpec {
     assert(downstream.collect().head.getLong(0) == 1000L)
   }
 
+  test("persist mode: a round counts its accumulator in its one " +
+      "materializing job; release frees the superseded round only") {
+    import spark.implicits._
+    // the shape of Dedup.clustersBuild's label loop: round k+1 is built
+    // from round k, counts into an accumulator while it materializes,
+    // then round k is released
+    sys.props("graft.memo.mode") = "persist"
+    try {
+      val acc = spark.sparkContext.longAccumulator("dfmemo_spec_round")
+      val prev = DfMemo.materializeFrame(spark,
+        (1 to 100).toDF("x").groupBy(($"x" % 10).as("k")).count())
+      val next = DfMemo.materializeFrame(spark,
+        prev.as[(Int, Long)].mapPartitions(_.map { case (k, c) =>
+          acc.add(1L); (k, c + 1) }).toDF("k", "c"))
+      assert(acc.value == 10L, "counted inside the materializing job")
+      DfMemo.release(prev)
+      assert(prev.storageLevel == StorageLevel.NONE)
+      assert(next.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(next.agg(sum($"c")).head().getLong(0) == 110L)
+      assert(acc.value == 10L, "next was recomputed after the release")
+      next.unpersist()
+      ()
+    } finally sys.props.remove("graft.memo.mode")
+  }
+
   /** The `corpus_memo` benchmark queries, in the name order it runs them. */
   private val CorpusQueries = Seq("ann_ivf_append", "ann_ivf_topk",
     "ann_mmr_topk", "ann_trunc_curve", "dedup_jaccard_topk",

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.rdd.LocalCheckpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{CurrentRow, Expression,
   RowFrame, SpecialFrameBoundary, SpecifiedWindowFrame, WindowExpression}
@@ -41,6 +42,10 @@ import graft.functions.{DfMemo, RollingZ}
   * legitimate ones are 60 rows (Bars `Lookback`, Trend `NormWin`); the
   * 3000-row z-score frame that cost most of a market pass is now the
   * linear [[RollingZ]] kernel, and this pass keeps it from coming back.
+  * The same walk, run in persist memo mode, fails on any scan of a
+  * locally checkpointed RDD: such a frame skipped `DfMemo`'s mode, so
+  * off-local its blocks die with the executor, and the walk cannot see
+  * the plan behind it.
   */
 class WindowAuditSpec extends SparkSpec {
 
@@ -136,31 +141,46 @@ class WindowAuditSpec extends SparkSpec {
       }
     }
 
-  /** Every WindowExec of a plan, looking through cached (persisted
-    * memo) frames and adaptive wrappers into the plans that built them. */
-  private def windowsOf(p: SparkPlan): Seq[WindowExec] =
+  /** Every WindowExec of a plan and every scan of a locally
+    * checkpointed RDD, looking through cached (persisted memo) frames
+    * and adaptive wrappers into the plans that built them. */
+  private def walk(p: SparkPlan): Seq[SparkPlan] =
     p.collectWithSubqueries {
       case w: WindowExec => Seq(w)
-      case m: InMemoryTableScanExec => windowsOf(m.relation.cachedPlan)
-      case a: AdaptiveSparkPlanExec => windowsOf(a.executedPlan)
+      case r: RDDScanExec if LocalCheckpoints.isLocal(r.rdd) => Seq(r)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
     }.flatten
 
+  /** Wide moving frames, and locally checkpointed scans (whose blocks
+    * are lost with their executor, and behind which the walk cannot
+    * see), found in one plan walk. */
   private def wideIn(df: DataFrame): Seq[String] =
-    windowsOf(df.queryExecution.executedPlan).flatMap(wideFrames)
+    walk(df.queryExecution.executedPlan).flatMap {
+      case w: WindowExec => wideFrames(w)
+      case r => Seq(s"locally checkpointed scan ${r.nodeName}: the " +
+        "frame bypasses DfMemo.materializeFrame")
+    }
 
   test("no aggregate over a moving ROWS frame wider than 256 rows, " +
       "memo frames included") {
     import spark.implicits._
     // the guard must see the old quadratic frame, and not the kernel
     val xs = (0L until 40L).toDF("x")
-    val old = xs.withColumn("m",
+    def oldFrame = xs.withColumn("m",
       avg($"x").over(Window.orderBy($"x").rowsBetween(-2999, 0)))
+    val old = oldFrame
     assert(wideIn(old).exists(_.startsWith("3000 rows")), wideIn(old))
     assert(wideIn(xs.withColumn("z", RollingZ.z($"x", $"x"))).isEmpty)
+    // ... and a raw localCheckpoint, but not the same frame materialized
+    // through DfMemo in persist mode
+    assert(wideIn(old.localCheckpoint()).exists(_.startsWith("locally")))
 
     // persist-mode memo keeps each shared frame's plan behind its cache
     // scan (local mode truncates it), so frames built inside a memo
-    // (the fusion and multi-symbol signals) are walked too
+    // (the fusion and multi-symbol signals) are walked too; a scan of a
+    // locally checkpointed RDD means a frame skipped the memo's mode —
+    // unrecoverable off-local, and opaque to this walk
     val dir = sfDir()
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val modeWas = sys.props.get("graft.memo.mode")
@@ -168,6 +188,9 @@ class WindowAuditSpec extends SparkSpec {
     sys.props("graft.memo.mode") = "persist"
     DfMemo.clear()
     try {
+      val viaMemo = DfMemo.materializeFrame(spark, oldFrame)
+      assert(wideIn(viaMemo).map(_.take(9)).distinct == Seq("3000 rows"),
+        wideIn(viaMemo))
       val wide = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
         case (name, fn) =>
           wideIn(fn(spark, dir)).distinct.map(f => s"$name: $f")
@@ -175,7 +198,9 @@ class WindowAuditSpec extends SparkSpec {
       if (wide.nonEmpty) fail(
         s"moving ROWS frames wider than $MaxMovingRows rows re-aggregate " +
           s"per row (O(rows × width)); use a prefix-sum form like " +
-          s"RollingZ:\n${wide.mkString("\n")}")
+          s"RollingZ. Locally checkpointed scans hide their plan and " +
+          s"lose their blocks with the executor; use " +
+          s"DfMemo.materializeFrame:\n${wide.mkString("\n")}")
     } finally {
       modeWas.fold(sys.props.remove("graft.memo.mode"))(
         sys.props.put("graft.memo.mode", _))
