@@ -7,13 +7,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frames shared by several queries in one session (the fusion signal
   * frame feeds five queries; the FSM event stream feeds three).
   *
+  * One builder per key: `cached` returns whatever frame the FIRST caller
+  * of a key built, so each key has exactly one `cached(...)` call in
+  * `src/main`, inside the one accessor every consumer goes through
+  * (MaterializationGuardSpec fails on two calls sharing a key head —
+  * the literal text before the first `$` or `:` — and on a key with no
+  * literal head).
+  *
   * Lifecycle: the outer map is WEAK in the session, so a stopped and
   * dropped SparkSession releases its cached plans without anyone calling
   * `clear()`. Within a session the memo is an LRU bounded at
   * [[MaxResident]] entries: a long multi-family run (Bench's 70+ queries)
-  * holds at most that many persisted frames at a time — the
-  * least-recently-used one is forgotten (its reference dropped; see
-  * `cached`) when a new family starts memoizing, instead of every
+  * holds at most that many materialized frames at a time — the
+  * least-recently-used one is forgotten (see [[forget]]) when a new
+  * family starts memoizing, instead of every
   * family's frames accumulating for the whole session (the round-2
   * bench-noise mechanism). Name order keeps a family's queries
   * consecutive, but that only stops thrashing when the family's working
@@ -42,8 +49,8 @@ object DfMemo {
     * 16 holds every single-query and benchmark-subset set above with
     * spare, so a single new key cannot evict a frame whose rebuild is a
     * full scan; small enough to bound resident cache pressure. Eviction
-    * is reference-drop only (safe — see below), so an undersized cap
-    * costs rebuild time, never correctness. */
+    * never breaks a plan that still holds the frame (see [[forget]]), so
+    * an undersized cap costs rebuild time, never correctness. */
   val MaxResident: Int =
     sys.props.get("graft.memo.cap")
       .orElse(sys.env.get("SPARK_GRAFT_MEMO_CAP"))
@@ -138,15 +145,9 @@ object DfMemo {
         if (raced != null) raced
         else {
           tab.put(key, built)
-          // LRU eviction drops the REFERENCE only. A checkpoint's blocks
-          // are its ONLY copy (lineage is truncated — LocalCheckpointRDD
-          // cannot recompute), so unpersisting here would crash any
-          // already-built plan that still references the frame with
-          // "Checkpoint block not found". The ContextCleaner frees the
-          // blocks once the last reference is gone — delayed, but safe.
           val it = tab.entrySet().iterator()
           while (tab.size() > MaxResident && it.hasNext) {
-            it.next()
+            forget(it.next().getValue)
             it.remove()
           }
           built
@@ -162,7 +163,7 @@ object DfMemo {
     * releasing a frame someone still holds fails their next execution.
     * A persisted frame is unpersisted; frames cached on top of it whose
     * data are already loaded stay cached. Used by
-    * `Dedup.clustersBuild` for the superseded per-round label frame,
+    * `Dedup.clustersDf` for the superseded per-round label frame,
     * which by construction nothing references once the next round is
     * materialized. */
   private[graft] def release(df: DataFrame): Unit =
@@ -175,11 +176,31 @@ object DfMemo {
         ()
     } catch { case NonFatal(_) => () }
 
-  /** Forget everything (idempotent; tests + long services). References
-    * drop; the ContextCleaner frees checkpoint blocks once consumers
-    * let go — an eager release here would break frames still held. */
+  /** What eviction and [[clear]] free, per mode:
+    *  - a checkpoint (local/reliable; its analyzed plan is a
+    *    LogicalRDD): the REFERENCE only. Its blocks are the only copy
+    *    (a LocalCheckpointRDD cannot recompute), so unpersisting would
+    *    fail any already-built plan still holding the frame with
+    *    "Checkpoint block not found"; the ContextCleaner frees them
+    *    once the last reference is gone — delayed, but safe.
+    *  - a persisted frame: unpersisted (non-blocking). Dropping the
+    *    reference alone would leave it registered in the CacheManager,
+    *    so the cap would bound nothing and an equal plan rebuilt after
+    *    `clear()` would be served from the old cache. A plan still
+    *    holding it recomputes from its kept lineage. */
+  private def forget(df: DataFrame): Unit =
+    if (!df.queryExecution.analyzed.isInstanceOf[
+        org.apache.spark.sql.execution.LogicalRDD]) release(df)
+
+  /** Forget everything (idempotent; tests + long services), freeing
+    * what [[forget]] frees. */
   def clear(): Unit = sessions.synchronized {
-    sessions.values.forEach(_.clear())
+    sessions.values.forEach { tab =>
+      tab.synchronized {
+        tab.values.forEach(forget(_))
+        tab.clear()
+      }
+    }
     sessions.clear()
   }
 }

@@ -49,22 +49,19 @@ object Bars extends OpModule {
     * The frame is time-bucket-DOMAIN sized (rows = span/hour), so the
     * checkpoint is metadata-scale at any SF. */
   private[graft] def ohlcDf(spark: SparkSession, dir: String): DataFrame =
-    graft.functions.DfMemo.cached(spark, s"ohlc:$dir")(
-      ohlcUncached(spark, dir))
-
-  private def ohlcUncached(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables
-      .events(spark, dir)
-      .groupBy(expr(s"ts_us div $HourUs").as("bucket"))
-      .agg(
-        min_by($"value", $"event_id").as("open"),
-        max($"value").as("high"),
-        min($"value").as("low"),
-        max_by($"value", $"event_id").as("close"),
-        sum($"value").as("volume"),
-        count(lit(1)).as("n_ticks"))
-  }
+    graft.functions.DfMemo.cached(spark, s"ohlc:$dir") {
+      import spark.implicits._
+      Tables
+        .events(spark, dir)
+        .groupBy(expr(s"ts_us div $HourUs").as("bucket"))
+        .agg(
+          min_by($"value", $"event_id").as("open"),
+          max($"value").as("high"),
+          min($"value").as("low"),
+          max_by($"value", $"event_id").as("close"),
+          sum($"value").as("volume"),
+          count(lit(1)).as("n_ticks"))
+    }
 
   private[operators] val ohlcSql: String =
     s"""SELECT epoch_us(ts) // $HourUs AS bucket,

@@ -55,23 +55,29 @@ object Dedup extends OpModule {
     * sf0.1; this shape runs in ~1s and its shuffle is a well-distributed
     * (doc_id) key at any corpus size). */
   private[operators] def shingled(spark: SparkSession, dir: String): DataFrame =
-    graft.functions.DfMemo.cached(spark, s"shingled:$dir")(
-      shingledUncached(spark, dir))
+    graft.functions.DfMemo.cached(spark, s"shingled:$dir") {
+      import spark.implicits._
+      val w = Window.partitionBy($"doc_id").orderBy($"pos")
+      Tables.documents(spark, dir)
+        .select($"doc_id",
+          posexplode(filter(split($"text", "\\s+"), t => t =!= ""))
+            .as(Seq("pos", "tok")))
+        .withColumn("t1", lead($"tok", 1).over(w))
+        .withColumn("t2", lead($"tok", 2).over(w))
+        .filter($"t2".isNotNull)
+        .select($"doc_id",
+          concat_ws(" ", $"tok", $"t1", $"t2").as("shingle"))
+        .withColumn("h", ColFns.hex32($"shingle"))
+    }
 
-  private def shingledUncached(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val w = Window.partitionBy($"doc_id").orderBy($"pos")
-    Tables.documents(spark, dir)
-      .select($"doc_id",
-        posexplode(filter(split($"text", "\\s+"), t => t =!= ""))
-          .as(Seq("pos", "tok")))
-      .withColumn("t1", lead($"tok", 1).over(w))
-      .withColumn("t2", lead($"tok", 2).over(w))
-      .filter($"t2".isNotNull)
-      .select($"doc_id",
-        concat_ws(" ", $"tok", $"t1", $"t2").as("shingle"))
-      .withColumn("h", ColFns.hex32($"shingle"))
-  }
+  /** Distinct (doc_id, h) shingle sets: the one frame behind exact
+    * Jaccard, set sizes, containment, the pair census and the minhash
+    * estimate's intersections, plus `Pipeline`'s contamination bits and
+    * `TextAnalysis`'s RRF shingle leg. */
+  private[operators] def jaccardSetsDf(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.functions.DfMemo.cached(spark, s"jaccard_sets:$dir")(
+      shingled(spark, dir).select(col("doc_id"), col("h")).distinct())
 
   // scalar range()+unnest: DuckDB's range *table* function cannot take
   // lateral column parameters (len(ws)), the scalar form can
@@ -122,7 +128,7 @@ object Dedup extends OpModule {
     // split/hex32 run once per row: inlined into the 8 array_min calls,
     // CollapseProject would re-expand them into the k minima and the
     // regex would re-run per element_at — the O(words^2) pathology the
-    // batch path's comment (shingledUncached) documents avoiding.
+    // batch path's comment (`shingled`) documents avoiding.
     // Spark's CollapseProject keeps non-cheap multi-referenced aliases
     // in their own Project, so the named columns are a real barrier.
     df.withColumn("_sig_ws", filter(split(text, "\\s+"), t => t =!= ""))
@@ -210,7 +216,7 @@ object Dedup extends OpModule {
     * sf0.01/sf0.1) produce the identical full pair set as before. */
   private def minhashPairsDf(spark: SparkSession, dir: String): DataFrame =
     graft.functions.DfMemo.cached(spark, s"minhash_pairs:$dir")(
-      minhashPairsUncached(spark, dir))
+      guardedPairFrame(bandFrame(spark, minhashDf(spark, dir), MinhashK / 4, 4)))
 
   /** The hot-bucket guard applied to a (doc_id, band, band_key) frame:
     * bucket members rank by doc_id, the first [[LshPairCap]] form the
@@ -243,11 +249,6 @@ object Dedup extends OpModule {
           col("x.band_key") === col("y.band_key"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     clique.union(star).distinct()
-  }
-
-  private def minhashPairsUncached(spark: SparkSession, dir: String): DataFrame = {
-    val sig = minhashDf(spark, dir)
-    guardedPairFrame(bandFrame(spark, sig, MinhashK / 4, 4))
   }
 
   private val minhashPairsSql: String = {
@@ -310,10 +311,7 @@ object Dedup extends OpModule {
       .join(sb, Seq("doc_b"))
       .select($"doc_a", $"doc_b",
         round(matches.cast("double") / MinhashK, 6).as("est_jaccard"))
-    // the distinct shingle-set frame is the SAME frame jaccardDf
-    // memoizes — share the key instead of re-running explode+distinct
-    val sets = graft.functions.DfMemo.cached(spark, s"jaccard_sets:$dir")(
-      shingled(spark, dir).select($"doc_id", $"h").distinct())
+    val sets = jaccardSetsDf(spark, dir)
     val sizes = setSizesDf(spark, dir)
     // same discipline below: the running left side stays pair-bounded
     // (pairs × shingles-per-doc at worst), so it broadcasts into each
@@ -377,8 +375,7 @@ object Dedup extends OpModule {
   private def containmentDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val pairs = minhashPairsDf(spark, dir)
-    val sets = graft.functions.DfMemo.cached(spark, s"jaccard_sets:$dir")(
-      shingled(spark, dir).select($"doc_id", $"h").distinct())
+    val sets = jaccardSetsDf(spark, dir)
     val sizes = setSizesDf(spark, dir)
     // same broadcast discipline as minhashEstDf: the running left side
     // stays pair-bounded, so it broadcasts into each corpus-sized frame
@@ -434,8 +431,7 @@ object Dedup extends OpModule {
   private def setSizesDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.functions.DfMemo.cached(spark, s"jaccard_sizes:$dir") {
-      val sets = graft.functions.DfMemo.cached(spark, s"jaccard_sets:$dir")(
-        shingled(spark, dir).select($"doc_id", $"h").distinct())
+      val sets = jaccardSetsDf(spark, dir)
       sets.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     }
   }
@@ -454,8 +450,7 @@ object Dedup extends OpModule {
   private def pairInterDf(spark: SparkSession, dir: String): DataFrame =
     graft.functions.DfMemo.cached(spark, s"jaccard_inter:$dir") {
       import spark.implicits._
-      val sets = graft.functions.DfMemo.cached(spark, s"jaccard_sets:$dir")(
-        shingled(spark, dir).select($"doc_id", $"h").distinct())
+      val sets = jaccardSetsDf(spark, dir)
       val hot = sets.groupBy($"h").agg(count(lit(1)).as("df"))
         .filter($"df" > HotShingleCap)
         .select($"h")
@@ -538,8 +533,7 @@ object Dedup extends OpModule {
     * map-side combine over the memoized postings frames. */
   private def pairCensusDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sets = graft.functions.DfMemo.cached(spark, s"jaccard_sets:$dir")(
-      shingled(spark, dir).select($"doc_id", $"h").distinct())
+    val sets = jaccardSetsDf(spark, dir)
     val dfreq = sets.groupBy($"h").agg(count(lit(1)).as("df"))
     val docsN = sets.agg(countDistinct($"doc_id").as("n_docs"))
     val shingleStats = dfreq.agg(
@@ -656,52 +650,48 @@ object Dedup extends OpModule {
     // re-executed per reference (clique head ×2, star ×2, occupancy
     // census — 5 window/banding executions per config, ×4 configs),
     // which was the warm per-attempt cost behind the board's #1 entry
-    graft.functions.DfMemo.cached(spark, s"lsh_curve:$dir")(
-      lshCurveBuild(spark, dir))
-
-  // pre-memo builder, visible for plan/one-shot attribution
-  private[graft] def lshCurveBuild(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val sig = minhashDf(spark, dir)
-    val truth = lshTruthDf(spark, dir)
-    val truthN = truth.agg(count(lit(1)).as("n_true_total"))
-    LshCurveConfigs.map { case (b, r) =>
-      // ranked ONCE per config and materialized (docs × b rows,
-      // bounded): head/star/occupancy all read these rows instead of
-      // re-running the banding + rank window per reference
-      val bands = graft.functions.DfMemo.materializeFrame(spark,
-        bandFrame(spark, sig, b, r)
-          .withColumn("rn", row_number().over(
-            Window.partitionBy($"band", $"band_key").orderBy($"doc_id"))))
-      // ONE pass over the guarded pair stream serves both counts: the
-      // truth set (real near-dup pairs, metadata-sized) broadcasts
-      // into a left join carrying an indicator, so the candidate count
-      // and the truth intersection fold in the same aggregation — no
-      // pair row is ever materialized to storage
-      val stats = guardedPairsRanked(bands)
-        .join(broadcast(truth.withColumn("is_true", lit(1L))),
-          Seq("doc_a", "doc_b"), "left")
-        .agg(count(lit(1)).as("n_candidates"),
-          coalesce(sum($"is_true"), lit(0L)).as("n_true"))
-      // closed-form slot census: per-bucket occupancy n contributes
-      // n*(n-1)/2 — no pair row is ever materialized, exact at any
-      // bucket size, an upper bound on the uncapped distinct count;
-      // occupancy is max(rn) per bucket on the already-ranked frame
-      val ub = bands.groupBy($"band", $"band_key")
-        .agg(max($"rn").as("n"))
-        .agg(coalesce(sum(expr("n * (n - 1) div 2")), lit(0L))
-          .as("n_candidates_ub"))
-      stats
-        .crossJoin(ub)
-        .crossJoin(truthN)
-        .select(lit(b.toLong).as("n_bands"), lit(r.toLong).as("rows_per_band"),
-          $"n_candidates", $"n_candidates_ub", $"n_true", $"n_true_total",
-          expr("(n_true * 100) div nullif(n_candidates, 0)")
-            .as("precision_pct"),
-          expr("(n_true * 100) div nullif(n_true_total, 0)")
-            .as("recall_pct"))
-    }.reduce(_ unionByName _)
-  }
+    graft.functions.DfMemo.cached(spark, s"lsh_curve:$dir") {
+      import spark.implicits._
+      val sig = minhashDf(spark, dir)
+      val truth = lshTruthDf(spark, dir)
+      val truthN = truth.agg(count(lit(1)).as("n_true_total"))
+      LshCurveConfigs.map { case (b, r) =>
+        // ranked ONCE per config and materialized (docs × b rows,
+        // bounded): head/star/occupancy all read these rows instead of
+        // re-running the banding + rank window per reference
+        val bands = graft.functions.DfMemo.materializeFrame(spark,
+          bandFrame(spark, sig, b, r)
+            .withColumn("rn", row_number().over(
+              Window.partitionBy($"band", $"band_key").orderBy($"doc_id"))))
+        // ONE pass over the guarded pair stream serves both counts: the
+        // truth set (real near-dup pairs, metadata-sized) broadcasts
+        // into a left join carrying an indicator, so the candidate count
+        // and the truth intersection fold in the same aggregation — no
+        // pair row is ever materialized to storage
+        val stats = guardedPairsRanked(bands)
+          .join(broadcast(truth.withColumn("is_true", lit(1L))),
+            Seq("doc_a", "doc_b"), "left")
+          .agg(count(lit(1)).as("n_candidates"),
+            coalesce(sum($"is_true"), lit(0L)).as("n_true"))
+        // closed-form slot census: per-bucket occupancy n contributes
+        // n*(n-1)/2 — no pair row is ever materialized, exact at any
+        // bucket size, an upper bound on the uncapped distinct count;
+        // occupancy is max(rn) per bucket on the already-ranked frame
+        val ub = bands.groupBy($"band", $"band_key")
+          .agg(max($"rn").as("n"))
+          .agg(coalesce(sum(expr("n * (n - 1) div 2")), lit(0L))
+            .as("n_candidates_ub"))
+        stats
+          .crossJoin(ub)
+          .crossJoin(truthN)
+          .select(lit(b.toLong).as("n_bands"), lit(r.toLong).as("rows_per_band"),
+            $"n_candidates", $"n_candidates_ub", $"n_true", $"n_true_total",
+            expr("(n_true * 100) div nullif(n_candidates, 0)")
+              .as("precision_pct"),
+            expr("(n_true * 100) div nullif(n_true_total, 0)")
+              .as("recall_pct"))
+      }.reduce(_ unionByName _)
+    }
 
   private lazy val lshCurveSql: String = {
     val sigCols = (0 until MinhashK)
@@ -794,27 +784,24 @@ object Dedup extends OpModule {
     * Memoized: the pair generator consumes the signatures twice (both
     * sides of its band self-join). */
   private def simhashDf(spark: SparkSession, dir: String): DataFrame =
-    graft.functions.DfMemo.cached(spark, s"simhash_sig:$dir")(
-      simhashUncached(spark, dir))
-
-  private def simhashUncached(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .withColumn("toks", filter(split($"text", "\\s+"), t => t =!= ""))
-      .select($"doc_id", explode($"toks").as("tok"))
-      .withColumn("h",
-        ColFns.hex32($"tok") +
-          (ColFns.hex32(concat(lit("s_"), $"tok")) % 16777216L) * 4294967296L)
-      .select($"doc_id", $"h",
-        explode(sequence(lit(0), lit(SimhashBits - 1))).as("b"))
-      .groupBy($"doc_id", $"b")
-      .agg(sum(when(expr("(h div shiftleft(cast(1 as bigint), int(b))) % 2") === 1, 1)
-        .otherwise(-1)).as("s"))
-      .groupBy($"doc_id")
-      .agg(sum(when($"s" >= 0,
-        expr("shiftleft(cast(1 as bigint), int(b))")).otherwise(0L))
-        .as("simhash"))
-  }
+    graft.functions.DfMemo.cached(spark, s"simhash_sig:$dir") {
+      import spark.implicits._
+      Tables.documents(spark, dir)
+        .withColumn("toks", filter(split($"text", "\\s+"), t => t =!= ""))
+        .select($"doc_id", explode($"toks").as("tok"))
+        .withColumn("h",
+          ColFns.hex32($"tok") +
+            (ColFns.hex32(concat(lit("s_"), $"tok")) % 16777216L) * 4294967296L)
+        .select($"doc_id", $"h",
+          explode(sequence(lit(0), lit(SimhashBits - 1))).as("b"))
+        .groupBy($"doc_id", $"b")
+        .agg(sum(when(expr("(h div shiftleft(cast(1 as bigint), int(b))) % 2") === 1, 1)
+          .otherwise(-1)).as("s"))
+        .groupBy($"doc_id")
+        .agg(sum(when($"s" >= 0,
+          expr("shiftleft(cast(1 as bigint), int(b))")).otherwise(0L))
+          .as("simhash"))
+    }
 
   private val simhashSql: String =
     s"""WITH tk AS (
@@ -873,10 +860,13 @@ object Dedup extends OpModule {
     * The ranked band frame is referenced FOUR times per evaluation
     * (clique x/y, star hub, star tail), and each reference re-ran the
     * explode + band_key projection + the (band, band_key) shuffle +
-    * rank window. Memoized under `bandsKey` so one execution feeds all
-    * four references. */
-  private def simhashGuardedPairs(sig: DataFrame, bandsKey: String): DataFrame = {
-    val bands = graft.functions.DfMemo.cached(sig.sparkSession, bandsKey)(
+    * rank window. Memoized per caller `tag` ("" for the shipped
+    * generator, "sat_" for the audit) so one execution feeds all four
+    * references. */
+  private def simhashGuardedPairs(sig: DataFrame, tag: String,
+      dir: String): DataFrame = {
+    val bands = graft.functions.DfMemo.cached(sig.sparkSession,
+        s"simhash_${tag}bands:$dir")(
       simhashBandFrame(sig)
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("band"), col("band_key")).orderBy(col("doc_id")))))
@@ -904,7 +894,7 @@ object Dedup extends OpModule {
   }
 
   private def simhashPairsDf(spark: SparkSession, dir: String): DataFrame =
-    simhashGuardedPairs(simhashDf(spark, dir), s"simhash_bands:$dir")
+    simhashGuardedPairs(simhashDf(spark, dir), "", dir)
 
   private val simhashPairsSql: String =
     s"""WITH sig AS ($simhashSql),
@@ -976,7 +966,7 @@ object Dedup extends OpModule {
       .withColumn("g", expr("cast((rk - 1) div 2 as bigint)"))
       .withColumn("p", expr("cast((rk - 1) % 2 as bigint)"))
       .select($"doc_id", (base + $"p" * lit(SimhashSatFlipMask)).as("simhash")))
-    val guarded = simhashGuardedPairs(sig, s"simhash_sat_bands:$dir")
+    val guarded = simhashGuardedPairs(sig, "sat_", dir)
     val exact = sig.as("x")
       .join(sig.as("y"), col("x.doc_id") < col("y.doc_id"))
       .filter(expr("bit_count(x.simhash ^ y.simhash)") <= SimhashHamMax)
@@ -1072,56 +1062,53 @@ object Dedup extends OpModule {
   // memoized: the keep-best resolution (Pipeline.dedup_keep_best) reuses
   // the converged labels instead of re-running the propagation loop
   private def clustersDf(spark: SparkSession, dir: String): DataFrame =
-    graft.functions.DfMemo.cached(spark, s"dedup_clusters:$dir")(
-      clustersBuild(spark, dir))
-
-  private def clustersBuild(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val pairs = minhashPairsDf(spark, dir)
-    val edges = graft.functions.DfMemo.materializeFrame(spark,
-      pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-        .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))))
-    var labels = graft.functions.DfMemo.materializeFrame(spark,
-      edges.select($"src".as("doc_id")).distinct()
-        .withColumn("canon", $"doc_id"))
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 64) {
-      val nbrMin = edges
-        .join(labels.select($"doc_id".as("src"), $"canon".as("nbr_canon")),
-          Seq("src"))
-        .groupBy($"dst".as("doc_id"))
-        .agg(min($"nbr_canon").as("nbr_min"))
-      // convergence detection rides INSIDE the round's one materializing
-      // job: the label fold counts its own changes into an accumulator
-      // while the eager materialization computes the new frame — no
-      // separate compare-join action per round (round 4 ran one, doubling
-      // the job count). Task retries can only inflate a NONZERO count
-      // (a task that saw no change re-adds zero), so `== 0` stays exact.
-      val changes = spark.sparkContext.longAccumulator(s"labelChanges$rounds")
-      val next = graft.functions.DfMemo.materializeFrame(spark, labels
-        .join(nbrMin, Seq("doc_id"), "left")
-        .select($"doc_id", $"canon", $"nbr_min")
-        .as[(Long, Long, Option[Long])]
-        .mapPartitions(_.map { case (id, canon, nbr) =>
-          val c = math.min(canon, nbr.getOrElse(canon))
-          if (c != canon) changes.add(1L)
-          (id, c)
-        })
-        .toDF("doc_id", "canon"))
-      converged = changes.value == 0L
-      // the superseded round's frame is referenced by nothing once
-      // `next` is materialized — release it eagerly instead of pinning
-      // O(rounds) label snapshots until the ContextCleaner's GC cycle
-      graft.functions.DfMemo.release(labels)
-      labels = next
-      rounds += 1
+    graft.functions.DfMemo.cached(spark, s"dedup_clusters:$dir") {
+      import spark.implicits._
+      val pairs = minhashPairsDf(spark, dir)
+      val edges = graft.functions.DfMemo.materializeFrame(spark,
+        pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
+          .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))))
+      var labels = graft.functions.DfMemo.materializeFrame(spark,
+        edges.select($"src".as("doc_id")).distinct()
+          .withColumn("canon", $"doc_id"))
+      var converged = false
+      var rounds = 0
+      while (!converged && rounds < 64) {
+        val nbrMin = edges
+          .join(labels.select($"doc_id".as("src"), $"canon".as("nbr_canon")),
+            Seq("src"))
+          .groupBy($"dst".as("doc_id"))
+          .agg(min($"nbr_canon").as("nbr_min"))
+        // convergence detection rides INSIDE the round's one materializing
+        // job: the label fold counts its own changes into an accumulator
+        // while the eager materialization computes the new frame — no
+        // separate compare-join action per round (round 4 ran one, doubling
+        // the job count). Task retries can only inflate a NONZERO count
+        // (a task that saw no change re-adds zero), so `== 0` stays exact.
+        val changes = spark.sparkContext.longAccumulator(s"labelChanges$rounds")
+        val next = graft.functions.DfMemo.materializeFrame(spark, labels
+          .join(nbrMin, Seq("doc_id"), "left")
+          .select($"doc_id", $"canon", $"nbr_min")
+          .as[(Long, Long, Option[Long])]
+          .mapPartitions(_.map { case (id, canon, nbr) =>
+            val c = math.min(canon, nbr.getOrElse(canon))
+            if (c != canon) changes.add(1L)
+            (id, c)
+          })
+          .toDF("doc_id", "canon"))
+        converged = changes.value == 0L
+        // the superseded round's frame is referenced by nothing once
+        // `next` is materialized — release it eagerly instead of pinning
+        // O(rounds) label snapshots until the ContextCleaner's GC cycle
+        graft.functions.DfMemo.release(labels)
+        labels = next
+        rounds += 1
+      }
+      // a pathological corpus (component diameter > 64) must fail loudly:
+      // silently emitting half-propagated labels would split real clusters
+      require(converged, s"label propagation did not converge in $rounds rounds")
+      labels.withColumn("is_canonical", $"doc_id" === $"canon")
     }
-    // a pathological corpus (component diameter > 64) must fail loudly:
-    // silently emitting half-propagated labels would split real clusters
-    require(converged, s"label propagation did not converge in $rounds rounds")
-    labels.withColumn("is_canonical", $"doc_id" === $"canon")
-  }
 
   private val clustersSql: String =
     s"""WITH RECURSIVE pairs AS MATERIALIZED ($minhashPairsSql),

@@ -137,38 +137,30 @@ object Flow {
     * coarser TFs are exact rollups of the fine-grain sums — no second
     * pass over raw events.
     */
-  /** The q15 frame pre-memo: FlowBarsSpec asserts its analyzed plan
-    * carries the b15-partitioned raw-event lag (the memoized twin's
-    * lineage is checkpoint-truncated, so the plan claim is only
-    * checkable here). */
-  private[graft] def lvQ15Uncached(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // event_id is globally unique and monotone in ts => deterministic lag.
-    val wB = Window.partitionBy($"b15").orderBy($"event_id")
-    Tables.events(spark, dir)
-      .withColumn("b15", expr(s"ts_us div $QuarterUs"))
-      .withColumn("prev", lag($"value", 1).over(wB))
-      .groupBy($"b15")
-      .agg(
-        sum($"value").as("qty"),
-        sum(abs($"value" - $"prev")).as("dp_within"),
-        min_by($"value", $"event_id").as("first_val"),
-        max_by($"value", $"event_id").as("last_val"))
-      .withColumn("prev_last",
-        lag($"last_val", 1).over(Window.orderBy($"b15")))
-      .withColumn("dp",
-        coalesce($"dp_within", lit(0.0)) +
-          coalesce(abs($"first_val" - $"prev_last"), lit(0.0)))
-      .withColumn("lv15", $"qty" / ($"dp" + 1e-6))
-      .select($"b15", $"qty", $"dp", $"lv15")
-  }
-
   private[operators] def lvDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // memoized: the three TF rollups (and the fusion frame via Scores)
     // would otherwise each re-run the raw-event scan + bucket aggregation
-    val q15 = graft.functions.DfMemo.cached(spark, s"lv_q15:$dir")(
-      lvQ15Uncached(spark, dir))
+    val q15 = graft.functions.DfMemo.cached(spark, s"lv_q15:$dir") {
+      // event_id is globally unique and monotone in ts => deterministic lag.
+      val wB = Window.partitionBy($"b15").orderBy($"event_id")
+      Tables.events(spark, dir)
+        .withColumn("b15", expr(s"ts_us div $QuarterUs"))
+        .withColumn("prev", lag($"value", 1).over(wB))
+        .groupBy($"b15")
+        .agg(
+          sum($"value").as("qty"),
+          sum(abs($"value" - $"prev")).as("dp_within"),
+          min_by($"value", $"event_id").as("first_val"),
+          max_by($"value", $"event_id").as("last_val"))
+        .withColumn("prev_last",
+          lag($"last_val", 1).over(Window.orderBy($"b15")))
+        .withColumn("dp",
+          coalesce($"dp_within", lit(0.0)) +
+            coalesce(abs($"first_val" - $"prev_last"), lit(0.0)))
+        .withColumn("lv15", $"qty" / ($"dp" + 1e-6))
+        .select($"b15", $"qty", $"dp", $"lv15")
+    }
     val h1 = q15
       .groupBy(expr("b15 div 4").as("bucket"))
       .agg(

@@ -72,8 +72,16 @@ object Graph extends OpModule {
     * memoized so `graph_pagerank` (reads r_last) and
     * `graph_pagerank_converge` (compares the two) price ONE run. */
   private[graft] def ranksDf(spark: SparkSession, dir: String): DataFrame =
-    graft.functions.DfMemo.cached(spark, s"pr_ranks:$dir")(
-      ranksBuild(spark, dir))
+    graft.functions.DfMemo.cached(spark, s"pr_ranks:$dir") {
+      import spark.implicits._
+      val (r7, step) = unrolledRanks(spark, dir, PrIters - 1)
+      // materialize the penultimate vector so the final step's plan does
+      // not re-derive the 7-level subtree a second time for the audit
+      val prev = graft.functions.DfMemo.materializeFrame(spark, r7)
+      step(prev)
+        .join(prev.select($"node", $"r".as("r_prev")), Seq("node"))
+        .select($"node", $"r_prev", $"r".as("r_last"))
+    }
 
   /** The unrolled fixed-point subtree: `iters` integer PageRank steps
     * as ONE declarative plan, plus the step function to extend it.
@@ -105,20 +113,6 @@ object Graph extends OpModule {
     var ranks = deg.select($"src".as("node"), lit(PrScale).as("r"))
     for (_ <- 1 to iters) ranks = step(ranks)
     (ranks, step)
-  }
-
-  /** The pre-memo rank builder (plan-shape assertions target
-    * [[unrolledRanks]] — in local mode the memoized frame is a
-    * LogicalRDD with the lineage cut). */
-  private[graft] def ranksBuild(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val (r7, step) = unrolledRanks(spark, dir, PrIters - 1)
-    // materialize the penultimate vector so the final step's plan does
-    // not re-derive the 7-level subtree a second time for the audit
-    val prev = graft.functions.DfMemo.materializeFrame(spark, r7)
-    step(prev)
-      .join(prev.select($"node", $"r".as("r_prev")), Seq("node"))
-      .select($"node", $"r_prev", $"r".as("r_last"))
   }
 
   private def pagerankDf(spark: SparkSession, dir: String): DataFrame = {

@@ -268,12 +268,9 @@ object Keyed extends OpModule {
       // a step frame is consumed TWICE (its own count and the next
       // step's join), so an un-memoized chain re-executes step 1's
       // events scan once per later step — 1+2+3+4 scans per window.
-      // The shipped window keeps its historical key (shared with
-      // `events_funnel`); the curve's own windows key on the window.
-      if (windowUs == FunnelWindowUs)
-        graft.functions.DfMemo.cached(spark, s"funnel_s$i:$dir")(build)
-      else
-        graft.functions.DfMemo.cached(spark, s"funnel_s$i:$windowUs:$dir")(build)
+      // Keyed on the window, so the shipped funnel and the curve's
+      // middle window share frames.
+      graft.functions.DfMemo.cached(spark, s"funnel_s$i:$windowUs:$dir")(build)
     }
     FunnelSteps.indices.foldLeft(Vector.empty[DataFrame]) { (acc, i) =>
       acc :+ step(i, acc.lastOption)

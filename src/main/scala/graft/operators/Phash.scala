@@ -129,22 +129,20 @@ object Phash extends OpModule {
     * synthesize+decode+hash per payload; only the 4-long row leaves the
     * partition. Memoized: the pair join consumes it twice. */
   private def phashDf(spark: SparkSession, dir: String): DataFrame =
-    DfMemo.cached(spark, s"media_phash:$dir")(phashUncached(spark, dir))
-
-  private def phashUncached(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select($"doc_id", $"text")
-      .as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, text) =>
-        (0 to 1).iterator.map { variant =>
-          val d = Multimodal.decode(synthesize(text, variant))
-          val (hash, gridSum) = dhash(d.data, d.width, d.height)
-          (id, variant.toLong, hash, gridSum)
-        }
-      })
-      .toDF("media_id", "variant", "phash", "grid_sum")
-  }
+    DfMemo.cached(spark, s"media_phash:$dir") {
+      import spark.implicits._
+      Tables.documents(spark, dir)
+        .select($"doc_id", $"text")
+        .as[(Long, String)]
+        .mapPartitions(_.flatMap { case (id, text) =>
+          (0 to 1).iterator.map { variant =>
+            val d = Multimodal.decode(synthesize(text, variant))
+            val (hash, gridSum) = dhash(d.data, d.width, d.height)
+            (id, variant.toLong, hash, gridSum)
+          }
+        })
+        .toDF("media_id", "variant", "phash", "grid_sum")
+    }
 
   /** Banded near-dup census: Hamming histogram of all pairs within
     * [[HamMax]], with the same-document (planted twin) count per

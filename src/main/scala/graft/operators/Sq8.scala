@@ -132,24 +132,13 @@ object Sq8 extends OpModule {
     val top = pairs.withColumn("rk", row_number().over(w))
       .filter($"rk" <= 3)
       .select($"qid".as("s_qid"), $"nid".as("s_nid"))
-    brute3(spark, dir)
+    // the exact top-3 ground truth the whole recall family shares
+    Similarity.brute3Df(spark, dir)
       .join(top, $"qid" === $"s_qid" && $"nid" === $"s_nid", "left")
       .groupBy($"qid")
       .agg(count($"s_nid").as("hits"))
       .withColumn("recall", $"hits" / lit(3.0))
   }
-
-  /** The exact top-3 ground truth — same memo key as Similarity's, so
-    * the O(Q·N) brute pass runs once across the whole recall family. */
-  private def brute3(spark: SparkSession, dir: String): DataFrame =
-    DfMemo.cached(spark, s"brute3:$dir") {
-      import spark.implicits._
-      val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
-      Similarity.queries("knn_brute")(spark, dir)
-        .withColumn("rk", row_number().over(w))
-        .filter($"rk" <= 3)
-        .select($"qid", $"nid")
-    }
 
   // ---- oracles ----
 

@@ -254,14 +254,18 @@ object TextAnalysis extends OpModule {
     * decimals — ln() implementations differ across engines at the ulp. */
   val TfIdfTopK = 5
 
+  /** Per-(doc, token) term counts: the one frame TF-IDF, the BM25 term
+    * weights and the unigram xent stats all read. */
+  private def unigramTfDf(spark: SparkSession, dir: String): DataFrame =
+    graft.functions.DfMemo.cached(spark, s"unigram_tf:$dir")(
+      tokenized(spark, dir)
+        .select(col("doc_id"), explode(col("toks")).as("tok"))
+        .groupBy(col("doc_id"), col("tok"))
+        .agg(count(lit(1)).as("tf")))
+
   private def tfidfDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // the SAME memoized (doc, tok, tf) frame the xent family builds
-    val tf = graft.functions.DfMemo.cached(spark, s"unigram_tf:$dir")(
-      tokenized(spark, dir)
-        .select($"doc_id", explode($"toks").as("tok"))
-        .groupBy($"doc_id", $"tok")
-        .agg(count(lit(1)).as("tf")))
+    val tf = unigramTfDf(spark, dir)
     val df = tf.groupBy($"tok").agg(count(lit(1)).as("df"))
     val n = Tables.documents(spark, dir)
       .agg(count(lit(1)).as("n_docs"))
@@ -331,11 +335,7 @@ object TextAnalysis extends OpModule {
   private def bm25TermDf(spark: SparkSession, dir: String): DataFrame =
     graft.functions.DfMemo.cached(spark, s"bm25_term:$dir") {
       import spark.implicits._
-      val tf = graft.functions.DfMemo.cached(spark, s"unigram_tf:$dir")(
-        tokenized(spark, dir)
-          .select($"doc_id", explode($"toks").as("tok"))
-          .groupBy($"doc_id", $"tok")
-          .agg(count(lit(1)).as("tf")))
+      val tf = unigramTfDf(spark, dir)
       val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
       val stats = dl.agg(count(lit(1)).as("n_docs"), sum($"dl").as("tot_dl"))
       val df = tf.groupBy($"tok").agg(count(lit(1)).as("df"))
@@ -427,8 +427,7 @@ object TextAnalysis extends OpModule {
     val kw = bm25Df(spark, dir).select($"qid", $"nid", $"rk".as("rk_kw"))
     // shingle-overlap leg: shared word-3-grams between the panel query
     // and the corpus, hot lists capped — Dedup's posting discipline
-    val sets = graft.functions.DfMemo.cached(spark, s"jaccard_sets:$dir")(
-      Dedup.shingled(spark, dir).select($"doc_id", $"h").distinct())
+    val sets = Dedup.jaccardSetsDf(spark, dir)
     // guarded postings memoized: referenced by BOTH sides of the overlap
     // join below — un-checkpointed, the hot-shingle aggregation and
     // anti-join re-ran once per side, per evaluation
@@ -571,11 +570,7 @@ object TextAnalysis extends OpModule {
     // the final per-doc join — without the memo Spark plans the corpus
     // explode + aggregation three times (same join-side double-plan the
     // bigram twin guards against)
-    val tf = graft.functions.DfMemo.cached(spark, s"unigram_tf:$dir")(
-      tokenized(spark, dir)
-        .select($"doc_id", explode($"toks").as("tok"))
-        .groupBy($"doc_id", $"tok")
-        .agg(count(lit(1)).as("tf")))
+    val tf = unigramTfDf(spark, dir)
     val uni = tf.groupBy($"tok").agg(sum($"tf").as("c"))
     val tot = uni.agg(sum($"c").as("tot"))
     val logp = uni.crossJoin(broadcast(tot))

@@ -139,26 +139,31 @@ object Fusion {
     }
   }
 
-  def step(st: FusionState, b: SigBar): (FusionState, FusedOut) = {
-    // rolling z over the taker-delta ring (strategy.py:1022-1044)
-    val delta = b.buy_vol - b.sell_vol
-    val ring = (st.ring :+ delta).takeRight(ZPop)
+  /** Push `delta` onto the trailing [[ZPop]] ring and score it against
+    * the ring's population mean/σ (ddof=0; None below [[ZMin]] or at
+    * zero spread) — the rolling z of [[step]] and `Streams.zscoreStream`
+    * (strategy.py:1022-1044). Two explicit left-to-right folds, NOT
+    * ring.sum / ring.map(..).sum: same addition order bit-for-bit (the
+    * replay specs pin stream ≡ batch), but no boxed intermediate vector.
+    * The O(ZPop) walk is kept deliberately (a subtract-on-evict running
+    * sum would change the FP summation tree and break bit-parity with
+    * the batch twin); the per-event service avoids the append/evict
+    * allocation instead ([[hotStep]] over [[ZRing]], same walk order). */
+  def zPush(ring0: Vector[Double], delta: Double): (Vector[Double], Option[Double]) = {
+    val ring = (ring0 :+ delta).takeRight(ZPop)
     val n = ring.length
-    // two explicit left-to-right folds, NOT ring.sum / ring.map(..).sum:
-    // same addition order bit-for-bit (the replay specs pin stream ≡
-    // batch), but no boxed intermediate vector. The O(ZPop) walk per bar
-    // is kept deliberately (a subtract-on-evict running sum would change
-    // the FP summation tree and break bit-parity with the batch twin);
-    // the per-event service avoids the append/evict allocation instead
-    // ([[hotStep]] over [[ZRing]], same walk order).
     var s1 = 0.0
     ring.foreach(s1 += _)
     val mu = s1 / n
     var s2 = 0.0
     ring.foreach { x => val d = x - mu; s2 += d * d }
     val sigma = math.sqrt(s2 / n)
-    val z =
-      if (n >= ZMin && sigma > 0) Some((delta - mu) / sigma) else None
+    (ring, if (n >= ZMin && sigma > 0) Some((delta - mu) / sigma) else None)
+  }
+
+  def step(st: FusionState, b: SigBar): (FusionState, FusedOut) = {
+    val delta = b.buy_vol - b.sell_vol
+    val (ring, z) = zPush(st.ring, delta)
     val (st2, out) = stepCore(st, b, delta, z)
     (st2.copy(ring = ring), out)
   }

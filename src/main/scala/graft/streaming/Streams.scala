@@ -4,7 +4,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.state.Fsm
+import graft.operators.Scores
+import graft.state.{Fsm, Fusion}
 import graft.state.Fsm.{FsmEvent, FsmIn, PosState, TrendIn, TrendOut, TrendState}
 
 /** Structured Streaming pipeline pieces (SURVEY.md §2.9): the live-mode
@@ -226,10 +227,6 @@ object Streams {
   case class ZOut(symbol: String, win_start: Timestamp, delta: Double,
       z: Option[Double], signal: String)
 
-  val ZPop = 3000 // population ring size (strategy.py:58)
-  val ZMin = 30   // minimum population (strategy.py:1024)
-  val ZGate = 2.1 // config.py:66
-
   /** Rolling z-score with the batch estimator's exact semantics: keyed
     * state holds the trailing-3000 delta ring (~24 KB/symbol, the
     * reference's population deque), so the live population is the same
@@ -251,15 +248,11 @@ object Streams {
         (symbol: String, it: Iterator[DeltaRow], state: GroupState[ZState]) => {
           var ring = state.getOption.map(_.ring.toVector).getOrElse(Vector.empty)
           val out = sortedSlice(it)(_.win_start.getTime).map { d =>
-            ring = (ring :+ d.delta).takeRight(ZPop)
-            val n = ring.length
-            val mu = ring.sum / n
-            val sigma = math.sqrt(ring.map(x => (x - mu) * (x - mu)).sum / n)
-            val z = if (n >= ZMin && sigma > 0) Some((d.delta - mu) / sigma)
-                    else None
+            val (next, z) = Fusion.zPush(ring, d.delta)
+            ring = next
             val signal = z match {
-              case Some(v) if v >= ZGate => "LONG"
-              case Some(v) if v <= -ZGate => "SHORT"
+              case Some(v) if v >= Scores.ZGate => "LONG"
+              case Some(v) if v <= -Scores.ZGate => "SHORT"
               case _ => "NONE"
             }
             ZOut(symbol, d.win_start, d.delta, z, signal)
@@ -420,7 +413,6 @@ object Streams {
     * equivalence against the batch frames on the same input, including
     * across trigger boundaries. */
   def lvStream(bars: Dataset[LvBarIn]): Dataset[LvOut] = {
-    import graft.state.Fusion
     val spark = bars.sparkSession
     import spark.implicits._
     bars
@@ -670,7 +662,6 @@ object Streams {
     * against `fusedBatch` on the same trades. */
   def fusedStream(bars: Dataset[graft.state.Fusion.SigBar])
       : Dataset[graft.state.Fusion.FusedOut] = {
-    import graft.state.Fusion
     val spark = bars.sparkSession
     import spark.implicits._
     bars
@@ -696,7 +687,6 @@ object Streams {
     * through the fold without ever materializing a symbol's history. */
   def fusedBatch(bars: Dataset[graft.state.Fusion.SigBar])
       : Dataset[graft.state.Fusion.FusedOut] = {
-    import graft.state.Fusion
     val spark = bars.sparkSession
     import spark.implicits._
     bars

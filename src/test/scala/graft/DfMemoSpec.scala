@@ -63,8 +63,8 @@ class DfMemoSpec extends SparkSpec {
   test("dropping the memo reference (eviction/clear) never breaks a " +
       "live consumer plan") {
     import spark.implicits._
-    // The LRU evicts by dropping the map REFERENCE only; the blocks
-    // must stay readable for any plan already holding the frame (the
+    // In local mode the LRU evicts by dropping the map REFERENCE only;
+    // the blocks must stay readable for any plan already holding the frame (the
     // ContextCleaner frees them once the last reference is gone).
     // clear() is the same reference-drop path eviction takes.
     val df = DfMemo.cached(spark, freshKey("evict"))(
@@ -75,10 +75,38 @@ class DfMemoSpec extends SparkSpec {
     assert(downstream.collect().head.getLong(0) == 1000L)
   }
 
+  test("persist mode: eviction and clear() unpersist the frame; a " +
+      "consumer planned before the eviction still reads it right") {
+    import spark.implicits._
+    sys.props("graft.memo.mode") = "persist"
+    try {
+      DfMemo.clear()
+      // distinct plans: the CacheManager shares one entry between equal
+      // plans, which would keep an evicted frame's twin cached
+      def frame(i: Int) = DfMemo.cached(spark, freshKey(s"lru$i"))(
+        (1 to 1000).toDF("x").filter($"x" % (i + 2) =!= 0)
+          .groupBy(($"x" % 7).as("k")).count())
+      val first = frame(0)
+      val downstream = first.agg(sum($"count").as("n"))
+      downstream.queryExecution.executedPlan // planned against the cache
+      assert(first.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      val rest = (1 to DfMemo.MaxResident).map(frame)
+      // MaxResident + 1 keys: the least recently used one is evicted
+      assert(first.storageLevel == StorageLevel.NONE)
+      assert(rest.forall(_.storageLevel == StorageLevel.MEMORY_AND_DISK))
+      assert(downstream.collect().head.getLong(0) == 500L)
+      DfMemo.clear()
+      assert(rest.forall(_.storageLevel == StorageLevel.NONE))
+    } finally {
+      sys.props.remove("graft.memo.mode")
+      DfMemo.clear()
+    }
+  }
+
   test("persist mode: a round counts its accumulator in its one " +
       "materializing job; release frees the superseded round only") {
     import spark.implicits._
-    // the shape of Dedup.clustersBuild's label loop: round k+1 is built
+    // the shape of Dedup.clustersDf's label loop: round k+1 is built
     // from round k, counts into an accumulator while it materializes,
     // then round k is released
     sys.props("graft.memo.mode") = "persist"

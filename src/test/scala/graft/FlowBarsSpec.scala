@@ -114,13 +114,12 @@ class FlowBarsSpec extends SparkSpec {
   }
 
   test("flow_lv plan: the raw-event lag is partitioned by the finest bucket") {
-    // inspect the PRE-memo builder: the memoized twin's lineage is
-    // checkpoint-truncated, so the raw-event window only appears here.
-    // The only window touching raw events must carry the b15 partition
-    // key — an UNpartitioned lag over events pulls the whole table
-    // through one task, the scale killer this formulation exists to avoid
-    val plan = Flow.lvQ15Uncached(spark, sfDir())
-      .queryExecution.analyzed.toString
+    // the lv_q15 memo frame's build plan (the first cached relation in
+    // flow_lv). The only window touching raw events must carry the b15
+    // partition key — an UNpartitioned lag over events pulls the whole
+    // table through one task, the scale killer this formulation exists
+    // to avoid
+    val plan = memoBuildPlan(Flow.queries("flow_lv")(spark, sfDir()))
     assert(plan.contains("windowspecdefinition(b15"),
       s"expected b15-partitioned lag:\n$plan")
     assert(!plan.contains("windowspecdefinition(event_id"),

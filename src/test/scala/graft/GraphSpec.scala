@@ -44,7 +44,7 @@ class GraphSpec extends SparkSpec {
     // standing (checkpointed) edge frame — the node-sized rank vector is
     // what moves, never the edges. Asserted on the PRE-memo unrolled
     // subtree (the served query reads the memoized LogicalRDD, lineage
-    // cut; ranksBuild checkpoints the 7th vector before the final step).
+    // cut; its build checkpoints the 7th vector before the final step).
     val plan = Graph.unrolledRanks(spark, dir, Graph.PrIters - 1)._1
       .queryExecution.executedPlan.toString
     val bhj = "BroadcastHashJoin".r.findAllIn(plan).size

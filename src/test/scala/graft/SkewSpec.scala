@@ -245,12 +245,15 @@ class SkewSpec extends graft.SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == ref)
     // the rank window exchanges on (source, granule), never source alone
-    // (plan-shape on the PRE-memo builder: the query itself serves a
-    // checkpointed LogicalRDD whose plan is already truncated)
-    val plan = Pipeline.shuffleDfBuild(spark, skewDir)
-      .queryExecution.executedPlan.toString
+    // (the build plan of the `shuffle` memo frame the query serves)
+    val plan = memoBuildPlan(Pipeline.queries("pipeline_shuffle")(spark, skewDir))
     assert(plan.contains("hashpartitioning(source") && plan.contains("sg"),
       s"no granule exchange in:\n$plan")
+    // ... which the rank window's own key shows: the (source, sg)
+    // count and the source-keyed base window put both strings above
+    // into the plan whatever the rank window is keyed on
+    assert("""row_number\(\) windowspecdefinition\(source#\d+, sg#\d+""".r
+      .findFirstIn(plan).nonEmpty, s"rank window not keyed on (source, sg):\n$plan")
     // the mega source genuinely spans many granules
     val nGranules = shuffled.filter($"source" === "mega")
       .select(expr(s"shuffle_key div ${4294967296L / Pipeline.ShuffleGranules}"))

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,6 +44,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
+  }
+
+  /** The physical plan a memoized frame was built with, for plan-shape
+    * assertions through the memo: `query` runs in persist memo mode
+    * (the frame's plan kept behind its cache; local mode leaves a
+    * lineage-cut LogicalRDD) after `DfMemo.clear()`, and the first
+    * cached relation in its plan gives `cacheBuilder.cachedPlan`. */
+  protected def memoBuildPlan(query: => DataFrame): String = {
+    val modeWas = sys.props.get("graft.memo.mode")
+    sys.props("graft.memo.mode") = "persist"
+    graft.functions.DfMemo.clear()
+    try query.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.cachedPlan.toString
+    }.getOrElse(fail("no memoized frame in the plan"))
+    finally {
+      modeWas.fold(sys.props.remove("graft.memo.mode"))(
+        sys.props.put("graft.memo.mode", _))
+      graft.functions.DfMemo.clear()
+    }
   }
 
   protected def rowsOf(df: DataFrame): Seq[Map[String, Any]] = {

@@ -138,12 +138,12 @@ class StreamingSpec extends SparkSpec {
       .toMap
     // reference computation over the same trailing window
     deltas.zipWithIndex.foreach { case (d, i) =>
-      val pop = deltas.slice(math.max(0, i - graft.streaming.Streams.ZPop + 1),
+      val pop = deltas.slice(math.max(0, i - graft.state.Fusion.ZPop + 1),
         i + 1).map(_.delta)
       val mu = pop.sum / pop.length
       val sigma = math.sqrt(pop.map(x => (x - mu) * (x - mu)).sum / pop.length)
       val expected =
-        if (pop.length >= graft.streaming.Streams.ZMin && sigma > 0)
+        if (pop.length >= graft.state.Fusion.ZMin && sigma > 0)
           Some((d.delta - mu) / sigma)
         else None
       val got = rows(d.win_start.getTime)
