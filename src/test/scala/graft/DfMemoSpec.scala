@@ -64,8 +64,9 @@ class DfMemoSpec extends SparkSpec {
       "live consumer plan") {
     import spark.implicits._
     // In local mode the LRU evicts by dropping the map REFERENCE only;
-    // the blocks must stay readable for any plan already holding the frame (the
-    // ContextCleaner frees them once the last reference is gone).
+    // the blocks must stay readable for any plan already holding the
+    // frame (the ContextCleaner frees them once the last reference is
+    // gone).
     // clear() is the same reference-drop path eviction takes.
     val df = DfMemo.cached(spark, freshKey("evict"))(
       (1 to 1000).toDF("x").groupBy(($"x" % 7).as("k")).count())
